@@ -10,10 +10,10 @@ per gene, a matrix of haplotype × SNP → allele, used to
 
 Scale stance: the matrices are reference data (PharmGKB scale ≈ 10² genes
 × ≤10² haplotypes × ≤10² SNPs — todo.txt:321-323), so they are collected
-once and shipped to executors via ``SparkContext.broadcast``. The bulk
-haplotype-calling stage does NOT use this class at all — it is expressed
-relationally (see pipeline.variant_to_gene_haplotype_and_novel_haplotype);
-only the het-disambiguation kernel needs the in-memory form.
+once (as Arrow) and shipped to executors via ``SparkContext.broadcast``.
+Both pipeline kernels read that one broadcast: haplotype calling
+(pipeline._classified_haplotype_groups) and het disambiguation
+(pipeline.variant_to_het_variant).
 """
 
 from __future__ import annotations
@@ -59,8 +59,9 @@ class GeneHaplotypeMatrix:
         """
         has_at_least_one_snp = False
         haps: set[str] = set(self.haplotypes)
+        snp_id_set = self.snp_id_set
         for snp_id, allele in variants:
-            gene_contains_snp = snp_id in self.snp_id_set
+            gene_contains_snp = snp_id in snp_id_set
             has_at_least_one_snp = has_at_least_one_snp or gene_contains_snp
             h = self.vh.get((snp_id, allele))
             if h is not None:
@@ -107,10 +108,10 @@ def build_matrices(
 
 
 def build_matrices_from_df(ghv: DataFrame) -> dict[str, GeneHaplotypeMatrix]:
-    rows = ghv.select(
+    table = ghv.select(
         "gene_name", "haplotype_name", "snp_id", "allele"
-    ).collect()
-    return build_matrices(rows)
+    ).toArrow()
+    return build_matrices(zip(*(col.to_pylist() for col in table.columns)))
 
 
 def broadcast_matrices(spark: SparkSession, ghv: DataFrame):

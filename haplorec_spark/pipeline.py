@@ -8,24 +8,19 @@ deliberately different — Spark-first, one shuffle per stage:
 * The reference loops genes × patients issuing point queries
   (Pipeline.groovy:230-234, 359-362 — the N+1 pattern its own todo.txt
   complains about). Here every stage is a single distributed plan.
-* The haplotype-calling kernel (``variantsToHaplotypes``,
-  GeneHaplotypeMatrix.groovy:213-249) is re-expressed **relationally** as
-  division: a candidate haplotype survives iff it matches *all* of a
-  chromosome's variants, i.e. ``count(matches) == count(variants)``.
-  No UDF, no broadcast dict, no Python in the hot path — the only large
-  shuffle keys on (job, patient, gene, chromosome, combo), the matrix
-  side is a broadcast hash join, and the plan scales linearly in
-  variant rows.
-* Only het disambiguation (Algorithm.groovy:73-255) is procedural —
-  a grouped applyInPandas kernel over (job, patient, gene) with the
-  gene matrices broadcast (they are reference data, ~MBs).
+* Haplotype calling and het disambiguation run the reference's own
+  kernels (``GeneHaplotypeMatrix.variantsToHaplotypes``,
+  GeneHaplotypeMatrix.groovy:213-249, and ``Algorithm.disambiguateHets``,
+  Algorithm.groovy:73-255) as grouped applyInPandas kernels over
+  (job, patient, gene). Both read the per-gene matrices from one
+  broadcast per :class:`Pipeline` (reference data, ~MBs), built on the
+  first job that needs it.
 
 At 100 TB: job_patient_variant is the big table; every stage keys its
-shuffle on a prefix of (job_id, patient_id, gene_name, ...), so the
-group-count aggregates combine map-side, the reference tables broadcast,
-and AQE handles per-gene skew (hot genes like CYP2D6 with 133×151
-matrices produce more matches per variant, which skew-join splitting
-absorbs).
+shuffle on a prefix of (job_id, patient_id, gene_name, ...). The
+variant → gene_snp join is broadcast and drops every row outside the
+reference genes before the kernels' shuffle, so a kernel group holds one
+patient's rows for one gene's SNPs (CYP2D6, the largest matrix, has 151).
 """
 
 from __future__ import annotations
@@ -33,6 +28,7 @@ from __future__ import annotations
 from dataclasses import dataclass
 
 import pandas as pd
+from pyspark import Broadcast
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -69,9 +65,9 @@ class ReferenceTables:
 # --------------------------------------------------------------------------
 
 def variant_to_het_variant(
-    spark: SparkSession,
     variant: DataFrame,
     ref: ReferenceTables,
+    matrices: Broadcast,
     max_het_snps: int = 20,
 ) -> DataFrame:
     """Disambiguate heterozygous calls onto physical chromosomes.
@@ -79,6 +75,7 @@ def variant_to_het_variant(
     Work unit = one (job, patient, gene) group of 'het' variants whose
     SNPs belong to the gene (reference joins gene_snp,
     Pipeline.groovy:365-372); each group runs Algorithm.disambiguateHets
+    against ``matrices`` (the broadcast of :func:`broadcast_matrices`)
     and emits combo-numbered rows. Invalid het input (a SNP without
     exactly two alleles) raises, failing the job as the reference does
     (Algorithm.groovy:76-85).
@@ -89,28 +86,11 @@ def variant_to_het_variant(
         .select("job_id", "patient_id", "gene_name", "snp_id", "allele")
     )
 
-    out_schema = sch.JOB_PATIENT_HET_VARIANT
-
-    # Only the genes that actually have het variants need their matrix on
-    # the executors: an all-hom job (the common large-batch case) costs
-    # one tiny distinct, not a collect+broadcast of the whole
-    # gene_haplotype_variant table.
-    hets = hets.persist()
-    het_genes = [r.gene_name for r in
-                 hets.select("gene_name").distinct().collect()]
-    if not het_genes:
-        hets.unpersist()
-        return spark.createDataFrame([], out_schema)
-    bc = broadcast_matrices(
-        spark,
-        ref.gene_haplotype_variant.filter(F.col("gene_name").isin(het_genes)),
-    )
-
     def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
         job_id = pdf["job_id"].iloc[0]
         patient_id = pdf["patient_id"].iloc[0]
         gene = pdf["gene_name"].iloc[0]
-        matrix = bc.value[gene]
+        matrix = matrices.value[gene]
         combos = disambiguate_hets(
             matrix,
             list(zip(pdf["snp_id"], pdf["allele"])),
@@ -130,17 +110,26 @@ def variant_to_het_variant(
         )
 
     return hets.groupBy("job_id", "patient_id", "gene_name").applyInPandas(
-        kernel, schema=out_schema
+        kernel, schema=sch.JOB_PATIENT_HET_VARIANT
     )
 
 
 # --------------------------------------------------------------------------
 # Stage: variant (+hetVariant) -> geneHaplotype + novelHaplotype
-# (U1, Pipeline.groovy:196-316 — re-expressed as relational division)
+# (U1, Pipeline.groovy:196-316)
 # --------------------------------------------------------------------------
 
+_CLASSIFIED_COLS = GROUP + ["n_survivors", "haplotype_name"]
+_CLASSIFIED_SCHEMA = (
+    "job_id long, patient_id string, gene_name string, "
+    "physical_chromosome string, het_combo int, het_combos int, "
+    "n_survivors int, haplotype_name string"
+)
+
+
 def _classified_haplotype_groups(
-    variant: DataFrame, het_variant: DataFrame, ref: ReferenceTables
+    variant: DataFrame, het_variant: DataFrame, ref: ReferenceTables,
+    matrices: Broadcast,
 ) -> DataFrame:
     """Per (job, patient, gene, chromosome, het_combo): candidate-haplotype
     classification.
@@ -148,117 +137,70 @@ def _classified_haplotype_groups(
     Returns GROUP columns + n_survivors + haplotype_name (valid when
     n_survivors == 1).
 
-    Relational reformulation of GeneHaplotypeMatrix.variantsToHaplotypes
-    folded over the reference's gene × patient × chromosome × combo loops
-    (Pipeline.groovy:230-313): the intersection of per-variant haplotype
-    sets equals {h : h matches every variant}, i.e. a division of the
-    group's variant set into gene_haplotype_variant. Consequences:
+    One grouped kernel per (job, patient, gene) folds
+    GeneHaplotypeMatrix.variantsToHaplotypes over the reference's
+    chromosome × combo loop (Pipeline.groovy:230-313). A chromosome's
+    variants are its hom rows (zygosity = 'hom', Pipeline.groovy:238-246)
+    plus one combo's disambiguated het rows; a chromosome without het
+    rows gets the single combo (1, 1) (Pipeline.groovy:267-272).
+    Consequences:
 
-    * unknown (snp, allele) for a gene SNP → that variant matches no
-      haplotype → no survivor reaches the group's variant count → novel
-      (GeneHaplotypeMatrix.groovy:234-239)
+    * unknown (snp, allele) for a gene SNP — a null allele included →
+      novel (GeneHaplotypeMatrix.groovy:234-239)
     * known alleles in an unseen combination → intersection empty → novel
       (GeneHaplotypeMatrix.groovy:228-232)
     * survivors > 1 → ambiguous, dropped (Pipeline.groovy:303-306)
+    * a gene with neither a non-null hom allele nor a het row is not
+      called at all (the work list, Pipeline.groovy:206-224)
     """
     gene_snp = F.broadcast(ref.gene_snp())
-    ghv = F.broadcast(
-        ref.gene_haplotype_variant.select(
-            "gene_name", "haplotype_name", "snp_id", "allele"
-        )
-    )
-
-    # Work list: (job, patient, gene) with at least one usable variant —
-    # non-het variants with a non-null allele, or disambiguated het rows
-    # (UNION DISTINCT of the two distinct-selects, Pipeline.groovy:206-224).
-    work_hom = (
-        variant.filter(
-            F.col("allele").isNotNull() & (F.col("zygosity") != "het")
-        )
-        .join(gene_snp, on="snp_id")
-        .select("job_id", "patient_id", "gene_name")
-    )
-    work_het = het_variant.join(gene_snp, on="snp_id").select(
-        "job_id", "patient_id", "gene_name"
-    )
-    work = work_hom.union(work_het).distinct()
-
-    # Chromosome-level variant sets. Hom variants (zygosity = 'hom',
-    # Pipeline.groovy:238-246) apply to every het combo of their
-    # chromosome; het rows carry their combo.
-    hom_g = (
+    cols = ["job_id", "patient_id", "gene_name", "physical_chromosome",
+            "het_combo", "het_combos", "snp_id", "allele"]
+    # Hom rows carry a null het_combo; het rows their combo.
+    hom = (
         variant.filter(F.col("zygosity") == "hom")
         .join(gene_snp, on="snp_id")
-        .select("job_id", "patient_id", "gene_name", "physical_chromosome",
-                "snp_id", "allele")
+        .withColumn("het_combo", F.lit(None).cast("int"))
+        .withColumn("het_combos", F.lit(None).cast("int"))
+        .select(*cols)
     )
-    het_g = het_variant.join(gene_snp, on="snp_id").select(
-        "job_id", "patient_id", "gene_name", "physical_chromosome",
-        "het_combo", "het_combos", "snp_id", "allele"
-    )
+    het = het_variant.join(gene_snp, on="snp_id").select(*cols)
 
-    jpgc = ["job_id", "patient_id", "gene_name", "physical_chromosome"]
-    het_groups = het_g.select(*GROUP).distinct()
-    # Chromosomes with hom variants only get the single combo (1, 1)
-    # (Pipeline.groovy:267-272).
-    hom_only_groups = (
-        hom_g.select(*jpgc)
-        .distinct()
-        .join(het_groups.select(*jpgc).distinct(), on=jpgc, how="left_anti")
-        .withColumn("het_combo", F.lit(1))
-        .withColumn("het_combos", F.lit(1))
-    )
-    groups = het_groups.unionByName(hom_only_groups).join(
-        work, on=["job_id", "patient_id", "gene_name"], how="left_semi"
-    )
-
-    hom_expanded = hom_g.join(groups, on=jpgc).select(
-        *GROUP, "snp_id", "allele"
-    )
-    all_v = (
-        hom_expanded.unionByName(het_g.select(*GROUP, "snp_id", "allele"))
-        .distinct()
-    )
-
-    n_variants = all_v.groupBy(*GROUP).agg(
-        F.count(F.lit(1)).alias("n_variants")
-    )
-    # Division: haplotypes matching every variant of the group.
-    match_counts = (
-        all_v.join(ghv, on=["gene_name", "snp_id", "allele"])
-        .groupBy(*GROUP, "haplotype_name")
-        .agg(F.count(F.lit(1)).alias("n_matches"))
-    )
-    survivors = (
-        match_counts.join(n_variants, on=GROUP)
-        .filter(F.col("n_matches") == F.col("n_variants"))
-        .groupBy(*GROUP)
-        .agg(
-            F.count(F.lit(1)).alias("n_survivors"),
-            F.min("haplotype_name").alias("haplotype_name"),
+    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
+        job_id, patient_id, gene = (
+            pdf[c].iloc[0] for c in ("job_id", "patient_id", "gene_name")
         )
-    )
-    return (
-        n_variants.select(*GROUP)
-        .join(survivors, on=GROUP, how="left")
-        .withColumn("n_survivors", F.coalesce("n_survivors", F.lit(0)))
-    )
+        is_het = pdf["het_combo"].notna()
+        if not is_het.any() and pdf["allele"].isna().all():
+            return pd.DataFrame([], columns=_CLASSIFIED_COLS)
+        hom_vs: dict[str, list] = {}
+        combo_vs: dict[tuple, list] = {}
+        for chrom, combo, combos, snp_id, allele, het_row in zip(
+            pdf["physical_chromosome"], pdf["het_combo"],
+            pdf["het_combos"], pdf["snp_id"], pdf["allele"], is_het,
+        ):
+            if chrom is None:  # belongs to no chromosome's variant set
+                continue
+            if het_row:
+                key = (chrom, int(combo), int(combos))
+                combo_vs.setdefault(key, []).append((snp_id, allele))
+            else:
+                hom_vs.setdefault(chrom, []).append((snp_id, allele))
+        het_chroms = {chrom for chrom, _, _ in combo_vs}
+        for chrom in hom_vs.keys() - het_chroms:
+            combo_vs[(chrom, 1, 1)] = []
 
+        matrix = matrices.value[gene]
+        out = []
+        for (chrom, combo, combos), vs in combo_vs.items():
+            haps = matrix.variants_to_haplotypes(hom_vs.get(chrom, []) + vs)
+            out.append((job_id, patient_id, gene, chrom, combo, combos,
+                        len(haps), min(haps) if haps else None))
+        return pd.DataFrame(out, columns=_CLASSIFIED_COLS)
 
-def variant_to_gene_haplotype_and_novel_haplotype(
-    variant: DataFrame, het_variant: DataFrame, ref: ReferenceTables
-) -> tuple[DataFrame, DataFrame]:
-    """(geneHaplotype, novelHaplotype) stage outputs."""
-    classified = _classified_haplotype_groups(variant, het_variant, ref)
-    gene_haplotype = classified.filter(F.col("n_survivors") == 1).select(
-        "job_id", "patient_id", "physical_chromosome", "het_combo",
-        "het_combos", "gene_name", "haplotype_name",
-    )
-    novel_haplotype = classified.filter(F.col("n_survivors") == 0).select(
-        "job_id", "patient_id", "physical_chromosome", "het_combo",
-        "het_combos", "gene_name",
-    )
-    return gene_haplotype, novel_haplotype
+    return hom.unionByName(het).groupBy(
+        "job_id", "patient_id", "gene_name"
+    ).applyInPandas(kernel, schema=_CLASSIFIED_SCHEMA)
 
 
 # --------------------------------------------------------------------------
@@ -385,10 +327,9 @@ class Pipeline:
     (Pipeline.groovy:567-576) without touching other jobs' partitions.
     """
 
-    #: Stages whose DataFrames feed more than one downstream consumer (or
-    #: are referenced several times within one plan — ``variant`` appears
-    #: in the work list, the hom side, and the het side of the haplotype
-    #: stage). Persisting them turns O(consumers) recomputations of the
+    #: Stages whose DataFrames feed more than one downstream consumer
+    #: (``variant`` feeds both the het and the haplotype kernel).
+    #: Persisting them turns O(consumers) recomputations of the
     #: shared lineage into one; the reference gets the same effect by
     #: materializing every stage into a MySQL table.
     PERSISTED_STAGES = ("variant", "hetVariant", "geneHaplotype", "genotype")
@@ -398,13 +339,21 @@ class Pipeline:
         spark: SparkSession,
         ref: ReferenceTables,
         max_het_snps: int = 20,
-        persist_stages: bool = True,
     ) -> None:
         self.spark = spark
         self.ref = ref
         self.max_het_snps = max_het_snps
-        self.persist_stages = persist_stages
         self._next_job_id = 1
+        self._matrices: Broadcast | None = None
+
+    def matrices(self) -> Broadcast:
+        """The per-gene matrices, broadcast once per Pipeline: the first
+        job that runs a kernel builds them, later jobs reuse them."""
+        if self._matrices is None:
+            self._matrices = broadcast_matrices(
+                self.spark, self.ref.gene_haplotype_variant
+            )
+        return self._matrices
 
     # -- input -------------------------------------------------------------
 
@@ -489,22 +438,21 @@ class Pipeline:
                     out[stage] = seed_dfs[stage]
                 else:
                     out[stage] = fn()
-                if self.persist_stages and stage in self.PERSISTED_STAGES:
+                if stage in self.PERSISTED_STAGES:
                     out[stage] = out[stage].persist()
             graph.add(stage, run, STAGE_DEPENDENCIES[stage])
 
         rule("variant", lambda: empty["variant"])
         rule("hetVariant", lambda: variant_to_het_variant(
-            self.spark, df_for("variant"), self.ref, self.max_het_snps))
+            df_for("variant"), self.ref, self.matrices(), self.max_het_snps))
 
         def build_haplotypes() -> DataFrame:
+            # Both outputs branch off the classification; persist the
+            # shared prefix so novelHaplotype doesn't rerun the kernel.
             classified = _classified_haplotype_groups(
-                df_for("variant"), df_for("hetVariant"), self.ref
-            )
-            if self.persist_stages:
-                # Both outputs branch off the classification; persist the
-                # shared prefix so novelHaplotype doesn't redo the division.
-                classified = classified.persist()
+                df_for("variant"), df_for("hetVariant"), self.ref,
+                self.matrices(),
+            ).persist()
             gh = classified.filter(F.col("n_survivors") == 1).select(
                 "job_id", "patient_id", "physical_chromosome", "het_combo",
                 "het_combos", "gene_name", "haplotype_name",

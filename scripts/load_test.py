@@ -18,8 +18,11 @@ allele), the rest 'A'.
 
 Prints one JSON line with both wall times. Exit status enforces BOTH
 reference bounds (warm-session measurement, like the reference's
-always-running MySQL). Measured on a 32-thread local session: scenario
-1 ~6 s (bound 10 s), scenario 2 ~9 s (bound 300 s).
+always-running MySQL). Measured with ``SPARK_GRAFT_CPUS=4`` on a 4-vCPU
+Xeon VM: scenario 1 5-6 s (bound 10 s), scenario 2 20-23 s (bound
+300 s). About 13-15 s of scenario 2 is building and broadcasting the
+per-gene matrices of the whole 2M-row table (Arrow fetch 8-10 s, dict
+build ~3 s, broadcast ~2 s).
 """
 
 from __future__ import annotations

@@ -85,6 +85,17 @@ def test_unambiguous_second_job_two_patients(spark, unambiguous_ref):
     ])
 
 
+def test_matrices_broadcast_once_on_first_job(spark, unambiguous_ref):
+    pipe = Pipeline(spark, unambiguous_ref)
+    assert pipe._matrices is None
+    variants = [("patient1", "A", "rs1", "A", "hom")]
+    pipe.run_job(variants=variants)
+    first = pipe._matrices
+    assert first is not None
+    pipe.run_job(variants=variants)
+    assert pipe._matrices is first
+
+
 # -- testDrugRecommendationsAmbiguous (PipelineTest.groovy:80-210) ----------
 
 def test_ambiguous_hets(spark):
@@ -327,3 +338,42 @@ def test_duplicate_drug_recommendation_paths(spark):
     check(out, "genePhenotype", [(1, "patient1", "g1", "homozygote normal")])
     check(out, "genotypeDrugRecommendation", [(1, "patient1", 1)])
     check(out, "phenotypeDrugRecommendation", [(1, "patient1", 1)])
+
+
+# -- a SNP listed under two genes' haplotypes --------------------------------
+
+def test_het_snp_shared_by_two_genes(spark):
+    # gene_snp joins variants on snp_id only, so rs1's het calls feed the
+    # het kernel and the haplotype calls of both g1 and g2.
+    ref = make_ref(
+        spark,
+        ghv=[
+            ("g1", "*1", "rs1", "A"), ("g1", "*1", "rs2", "G"),
+            ("g1", "*2", "rs1", "G"), ("g1", "*2", "rs2", "G"),
+            ("g2", "*1", "rs1", "A"), ("g2", "*1", "rs3", "C"),
+            ("g2", "*2", "rs1", "G"), ("g2", "*2", "rs3", "C"),
+        ],
+    )
+    out = Pipeline(spark, ref).run_job(variants=[
+        ("patient1", "A", "rs1", "A", "het"),
+        ("patient1", "B", "rs1", "G", "het"),
+        ("patient1", "A", "rs2", "G", "hom"),
+        ("patient1", "B", "rs2", "G", "hom"),
+        ("patient1", "A", "rs3", "C", "hom"),
+        ("patient1", "B", "rs3", "C", "hom"),
+    ])
+    check(out, "hetVariant", [
+        (1, "patient1", "A", 1, 1, "rs1", "A"),
+        (1, "patient1", "A", 1, 1, "rs1", "A"),
+        (1, "patient1", "B", 1, 1, "rs1", "G"),
+        (1, "patient1", "B", 1, 1, "rs1", "G"),
+    ])
+    check(out, "geneHaplotype", [
+        (1, "patient1", "g1", "*1"), (1, "patient1", "g1", "*2"),
+        (1, "patient1", "g2", "*1"), (1, "patient1", "g2", "*2"),
+    ])
+    check(out, "novelHaplotype", [])
+    check(out, "genotype", [
+        (1, "patient1", "g1", "*1", "*2"),
+        (1, "patient1", "g2", "*1", "*2"),
+    ])

@@ -264,6 +264,85 @@ def test_disambiguate_hets_invariants(n_haps, n_snps, seed):
                 assert surviving
 
 
+@settings(SLOW, max_examples=6)
+@given(
+    n_haps=st.integers(1, 4),
+    n_snps=st.integers(1, 4),
+    seed=st.integers(0, 999),
+)
+def test_haplotype_calls_match_matrix_kernel(spark, n_haps, n_snps, seed):
+    """Random gene matrix; per patient, random hom alleles per chromosome
+    (null and unknown alleles included) + optional het pairs, through
+    Pipeline.run_job: per chromosome × het combo, a singleton
+    variants_to_haplotypes result is a geneHaplotype call, an empty one a
+    novelHaplotype row, and a larger one neither. A patient whose only
+    rows are null-allele hom rows gets nothing."""
+    import random
+
+    from haplorec_spark.algorithm import disambiguate_hets, het_variant_rows
+    from haplorec_spark.matrix import build_matrices
+    from haplorec_spark.pipeline import Pipeline
+    from tests.conftest import rows
+    from tests.fixtures import make_ref
+
+    rng = random.Random(seed)
+    snps = [f"rs{i}" for i in range(n_snps)]
+    ghv = [
+        ("g", f"*{h}", s, rng.choice("AC"))
+        for h in range(1, n_haps + 1)
+        for s in snps
+    ]
+    matrix = build_matrices(ghv)["g"]
+
+    # p0 has only null-allele hom rows: no call and no novel row
+    variants = [("p0", chrom, s, None, "hom") for chrom in "AB" for s in snps]
+    want_het, want_calls, want_novel = [], [], []
+    for patient in ("p1", "p2", "p3", "p4"):
+        het_snps = [s for s in snps if rng.random() < 0.3]
+        hets = []
+        for s in het_snps:
+            a1, a2 = rng.sample("ACG", 2)
+            hets += [(s, a1), (s, a2)]
+        hom = {
+            chrom: [(s, rng.choice(["A", "C", "G", None]))
+                    for s in snps
+                    if s not in het_snps and rng.random() < 0.7]
+            for chrom in "AB"
+        }
+        variants += [(patient, chrom, s, a, "hom")
+                     for chrom, vs in hom.items() for s, a in vs]
+        variants += [(patient, chrom, s, a, "het")
+                     for chrom, (s, a) in zip("AB" * len(het_snps), hets)]
+
+        het_rows = (het_variant_rows(disambiguate_hets(matrix, hets))
+                    if hets else [])
+        combos: dict[tuple, list] = {}
+        for r in het_rows:
+            key = (r["physical_chromosome"], r["het_combo"], r["het_combos"])
+            combos.setdefault(key, []).append((r["snp_id"], r["allele"]))
+            want_het.append((patient, *key, r["snp_id"], r["allele"]))
+        for chrom, vs in hom.items():
+            if vs and not any(key[0] == chrom for key in combos):
+                combos[(chrom, 1, 1)] = []
+        if not het_rows and all(a is None for vs in hom.values()
+                                for _, a in vs):
+            continue
+        for (chrom, combo, n), vs in combos.items():
+            haps = matrix.variants_to_haplotypes(hom[chrom] + vs)
+            if len(haps) == 1:
+                want_calls.append((patient, chrom, combo, n, min(haps)))
+            elif not haps:
+                want_novel.append((patient, chrom, combo, n))
+
+    out = Pipeline(spark, make_ref(spark, ghv=ghv)).run_job(variants=variants)
+    key = ["patient_id", "physical_chromosome", "het_combo", "het_combos"]
+    assert rows(out["hetVariant"], *key, "snp_id", "allele") == sorted(
+        want_het)
+    assert rows(out["geneHaplotype"], *key, "haplotype_name") == sorted(
+        want_calls)
+    assert rows(out["novelHaplotype"], *key) == sorted(want_novel)
+
+
 edge_lists = st.lists(
     st.tuples(
         st.integers(min_value=0, max_value=15),

@@ -1,331 +1,48 @@
-"""haplorec_spark — a PySpark-native analytics engine with the query and
-data-processing capabilities of innovativemedicine/haplorec.
+"""haplorec_spark — the innovativemedicine/haplorec pharmacogenomics
+system on PySpark.
 
 The reference (read-only at /root/reference) is a MySQL + Groovy
-pharmacogenomics pipeline; this package re-expresses every operator it
-implements (see SURVEY.md §2) as idiomatic Spark DataFrame compositions,
-plus the large-scale training-data operators (dedup, similarity search,
-text analysis, multimodal plumbing) such an engine needs at 100 TB.
+pipeline that turns a patient genotyping file into haplotype, genotype,
+phenotype and drug-recommendation calls. It has three layers, each
+re-expressed here as Spark DataFrame compositions (see SURVEY.md §2):
 
-Layout:
-    operators/    engine-level relational compositions Spark lacks as
-                  one-liners (relational division, ordered pivot, report
-                  dedup/collapse, FK resolution, reshape, dedup family,
-                  ANN similarity, text analysis, TF-IDF/BM25 relevance,
-                  sampling/splits/decontamination, multimodal binary)
-    functions/    scalar expression helpers (phenotype normalization,
-                  zygosity classification, pair ordering)
-    plans/        Make-like dependency DAG orchestrator
-    sources.py    DSV reader, variant-file normalizing scan
-    warehouse.py  CTAS / insert-select / materialization modes
-    streaming.py  watermarked aggregates, stateful ops, foreachBatch
-                  incremental job ingest
-    matrix.py     gene-haplotype matrix (broadcastable reference data)
-    algorithm.py  het-disambiguation kernel (pure Python core)
-    pipeline.py   the 8 pipeline stages + job lifecycle
-    report.py     condensed report generation
-    queries.py    query registry with DuckDB oracles (correctness gate)
-    curation.py   composed end-to-end corpus curation (filter, redact,
-                  dedup, decontaminate, mix, split, pack)
+1. Relational operators the reference builds its stages from, which
+   Spark lacks as one-liners (``operators/``): relational division
+   (``division``), ordered positional pivot (``pivot``), the report
+   row-condensing chain (``rows``), surrogate-id / foreign-key
+   resolution (``fk``) and wide <-> long reshape (``reshape``).
+2. The eight-stage patient pipeline: ``sources.variant_source`` reads
+   the genotyping export, ``pipeline.Pipeline.run_job`` builds the
+   job_id-partitioned stage tables (variant, hetVariant, geneHaplotype,
+   novelHaplotype, genotype, genePhenotype and the two
+   drug-recommendation stages), ``Pipeline.materialize`` writes them and
+   ``report`` condenses them into the two drug-recommendation reports.
+   ``matrix`` (broadcast gene-haplotype matrices), ``algorithm`` (het
+   disambiguation), ``plans/`` (the stage dependency DAG) and
+   ``streaming.incremental_variant_ingest`` (one job per micro-batch)
+   serve it.
+3. PharmGKB reference-data ingest: ``sources.dsv_source``, ``schema``
+   (the reference DDL), ``warehouse`` (CTAS / insert-select /
+   materialization modes), ``functions/`` (phenotype-name normalizer
+   and the "Phenotype (Genotype)" text grammar) and ``operators.fk``.
 """
 
 __version__ = "0.1.0"
 
-from haplorec_spark.curation import (  # noqa: E402
-    CurationConfig,
-    curate_documents,
-    curation_report,
-)
-from haplorec_spark.operators.asof import asof_join  # noqa: E402
-from haplorec_spark.operators.ranges import interval_join  # noqa: E402
 from haplorec_spark.operators.division import (  # noqa: E402
     select_where_either_subset_of,
     select_where_subset_of,
 )
-from haplorec_spark.operators.packing import (  # noqa: E402
-    pack_sequences,
-    pack_token_ids,
-    write_id_sequence_shards,
-    write_training_shards,
-)
 from haplorec_spark.operators.pivot import grouped_rows_to_columns  # noqa: E402
-from haplorec_spark.operators.multimodal import (  # noqa: E402
-    media_duplicate_pairs,
-    synthesize_media_table,
-)
-from haplorec_spark.operators.profiling import (  # noqa: E402
-    frequent_values,
-    numeric_quantiles,
-    profile_drift,
-    profile_table,
-    text_corpus_profile,
-    value_histogram_psi,
-)
-from haplorec_spark.operators.relevance import bm25_rank, tfidf  # noqa: E402
-from haplorec_spark.operators.sampling import (  # noqa: E402
-    contamination_report,
-    decontaminate,
-    hash_fraction_sample,
-    hash_split,
-    leakage_safe_split,
-    mixture_sample,
-    top_fraction_by_score,
-    weighted_sample,
-)
-from haplorec_spark.operators.web import (  # noqa: E402
-    canonicalize_urls,
-    cap_per_domain,
-    filter_blocked_domains,
-    parse_urls,
-)
-from haplorec_spark.operators.dedup import (  # noqa: E402
-    cluster_size_profile,
-    dedup_survivors,
-    duplicate_ngram_spans,
-    compact_lsh_store,
-    lsh_parameters,
-    lsh_verified_pairs,
-    strip_duplicate_ngram_spans,
-    verification_profile,
-    verify_jaccard_pairs,
-)
-from haplorec_spark.operators.percentiles import (  # noqa: E402
-    group_percentiles,
-)
-from haplorec_spark.operators.similarity import (  # noqa: E402
-    ann_recall,
-    ann_recall_summary,
-    cell_profile,
-    compact_pq_store,
-    rebalance_pq_store,
-    rebalance_sq_store,
-    rebuild_pq_store,
-    rebuild_sq_store,
-    store_cell_stats,
-    store_health,
-    StoreHealth,
-    incremental_semantic_pairs,
-    ivf_pq_topk,
-    ivf_sq_topk,
-    pq_encode,
-    pq_store_topk,
-    pq_topk,
-    pq_train,
-    refine_topk,
-    sq_bounds,
-    sq_encode,
-    sq_store_topk,
-    sq_topk,
-    sq_train,
-    write_sq_store,
-    train_pq_index,
-    write_pq_store,
-    semantic_dedup_pairs,
-    write_semantic_store,
-)
-from haplorec_spark.operators.bloom import (  # noqa: E402
-    compact_bloom_store,
-    bloom_build,
-    bloom_decontaminate,
-    bloom_parameters,
-    bloom_probe,
-)
-from haplorec_spark.operators.funnel import (  # noqa: E402
-    funnel_counts,
-    funnel_depth,
-    funnel_step_timings,
-)
-from haplorec_spark.operators.html import extract_html_text  # noqa: E402
-from haplorec_spark.operators.retention import retention_cohorts  # noqa: E402
-from haplorec_spark.operators.text import (  # noqa: E402
-    encoding_quality,
-    fix_encoding,
-    with_fixed_encoding,
-    bigram_logprob_score,
-    blocked_term_fraction,
-    build_vocab,
-    chunk_documents,
-    language_id_model,
-    linear_text_score,
-    normalize_text,
-    perplexity_buckets,
-    redact_pii,
-    script_fractions,
-    strip_boilerplate_lines,
-    trigram_logprob_score,
-    unigram_logprob_score,
-)
-from haplorec_spark.operators.training import (  # noqa: E402
-    LanguageIdModel,
-    LinearTextModel,
-    calibration_buckets,
-    evaluate_binary_classifier,
-    load_language_model,
-    load_text_model,
-    save_language_model,
-    save_text_model,
-    top_features,
-    train_language_classifier,
-    train_linear_text_classifier,
-)
 from haplorec_spark.pipeline import Pipeline, ReferenceTables  # noqa: E402
 from haplorec_spark.session import get_spark  # noqa: E402
-from haplorec_spark.sources import (  # noqa: E402
-    jsonl_sink,
-    jsonl_source,
-    warc_source,
-    wet_source,
-)
-from haplorec_spark.streaming import (  # noqa: E402
-    compact_funnel_state,
-    compact_retention_state,
-    funnel_state_counts,
-    funnel_state_depths,
-    funnel_state_step_timings,
-    retention_state_cohorts,
-    stream_bloom_dedup_ingest,
-    stream_funnel_ingest,
-    stream_dedup_events,
-    stream_dedup_ingest,
-    stream_drift_monitor,
-    stream_pq_index_ingest,
-    stream_retention_ingest,
-    stream_semantic_dedup_ingest,
-    stream_tokenizer_drift,
-)
 
 __all__ = [
-    "CurationConfig",
-    "LanguageIdModel",
-    "LinearTextModel",
     "Pipeline",
     "ReferenceTables",
-    "ann_recall",
-    "ann_recall_summary",
-    "asof_join",
-    "bigram_logprob_score",
-    "blocked_term_fraction",
-    "bloom_build",
-    "bloom_decontaminate",
-    "bloom_parameters",
-    "bloom_probe",
-    "bm25_rank",
-    "build_vocab",
-    "calibration_buckets",
-    "canonicalize_urls",
-    "cap_per_domain",
-    "cell_profile",
-    "compact_pq_store",
-    "rebalance_pq_store",
-    "rebalance_sq_store",
-    "rebuild_pq_store",
-    "rebuild_sq_store",
-    "store_cell_stats",
-    "store_health",
-    "StoreHealth",
-    "chunk_documents",
-    "cluster_size_profile",
-    "group_percentiles",
-    "contamination_report",
-    "curate_documents",
-    "curation_report",
-    "decontaminate",
-    "dedup_survivors",
-    "duplicate_ngram_spans",
-    "encoding_quality",
-    "fix_encoding",
-    "with_fixed_encoding",
-    "evaluate_binary_classifier",
-    "extract_html_text",
-    "filter_blocked_domains",
-    "frequent_values",
-    "funnel_counts",
-    "funnel_depth",
-    "funnel_step_timings",
     "get_spark",
     "grouped_rows_to_columns",
-    "hash_fraction_sample",
-    "hash_split",
-    "incremental_semantic_pairs",
-    "interval_join",
-    "ivf_pq_topk",
-    "ivf_sq_topk",
-    "jsonl_sink",
-    "language_id_model",
-    "leakage_safe_split",
-    "compact_bloom_store",
-    "compact_lsh_store",
-    "lsh_parameters",
-    "lsh_verified_pairs",
-    "verification_profile",
-    "jsonl_source",
-    "warc_source",
-    "wet_source",
-    "load_language_model",
-    "load_text_model",
-    "media_duplicate_pairs",
-    "linear_text_score",
-    "mixture_sample",
-    "normalize_text",
-    "numeric_quantiles",
-    "pack_sequences",
-    "pack_token_ids",
-    "parse_urls",
-    "perplexity_buckets",
-    "pq_encode",
-    "pq_store_topk",
-    "pq_topk",
-    "pq_train",
-    "profile_drift",
-    "profile_table",
-    "redact_pii",
-    "script_fractions",
-    "refine_topk",
-    "retention_cohorts",
     "select_where_either_subset_of",
     "select_where_subset_of",
-    "save_language_model",
-    "save_text_model",
-    "semantic_dedup_pairs",
-    "sq_bounds",
-    "sq_encode",
-    "sq_store_topk",
-    "sq_topk",
-    "sq_train",
-    "write_sq_store",
-    "compact_funnel_state",
-    "compact_retention_state",
-    "funnel_state_counts",
-    "funnel_state_depths",
-    "funnel_state_step_timings",
-    "retention_state_cohorts",
-    "stream_bloom_dedup_ingest",
-    "stream_funnel_ingest",
-    "stream_dedup_events",
-    "synthesize_media_table",
-    "stream_dedup_ingest",
-    "stream_drift_monitor",
-    "stream_pq_index_ingest",
-    "stream_retention_ingest",
-    "stream_semantic_dedup_ingest",
-    "stream_tokenizer_drift",
-    "strip_boilerplate_lines",
-    "strip_duplicate_ngram_spans",
-    "text_corpus_profile",
-    "tfidf",
-    "top_features",
-    "train_language_classifier",
-    "train_linear_text_classifier",
-    "train_pq_index",
-    "top_fraction_by_score",
-    "trigram_logprob_score",
-    "unigram_logprob_score",
-    "value_histogram_psi",
-    "verify_jaccard_pairs",
-    "weighted_sample",
-    "write_pq_store",
-    "write_semantic_store",
-    "write_id_sequence_shards",
-    "write_training_shards",
     "__version__",
 ]

@@ -60,9 +60,8 @@ def assign_ids(
     # of this function can safely release it) — checkpointed blocks
     # are released by the ContextCleaner when the frame is GC'd, and
     # downstream plans read a LogicalRDD instead of re-embedding the
-    # distinct. Trade (as documented in dedup._star_verify_first_pass):
-    # a lost executor cannot recompute its slice; the frame is
-    # dimension-sized, never fact-sized.
+    # distinct. Trade: a lost executor cannot recompute its slice; the
+    # frame is dimension-sized, never fact-sized.
     keys = dim.select(*natural_key).distinct().localCheckpoint()
     n_keys = keys.count()
 

@@ -500,14 +500,15 @@ class Pipeline:
         self, tables: dict[str, DataFrame], warehouse: str
     ) -> None:
         """Write stage tables partitioned by job_id, overwriting only the
-        partitions present in each DataFrame (job re-run semantics)."""
-        self.spark.conf.set(
-            "spark.sql.sources.partitionOverwriteMode", "dynamic"
-        )
+        partitions present in each DataFrame (job re-run semantics).
+
+        Dynamic overwrite is a per-write option, so the session's
+        ``spark.sql.sources.partitionOverwriteMode`` is left as it is."""
         for stage, df in tables.items():
             table = STAGE_TABLE_NAMES[stage]
             (
                 df.write.mode("overwrite")
+                .option("partitionOverwriteMode", "dynamic")
                 .partitionBy("job_id")
                 .parquet(f"{warehouse}/{table}")
             )

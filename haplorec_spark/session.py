@@ -18,17 +18,19 @@ ENGINE_CONFS: dict[str, str] = {
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
     "spark.sql.adaptive.skewJoin.enabled": "true",
-    # Let AQE re-plan (coalesce/skew-split) INSIDE cached plans too: the
-    # default pins a persisted subtree's exchange layout, so the
-    # multi-persist operators (bounded star-verification, k-means
-    # lineages) ran every post-shuffle stage at the static partition
-    # count regardless of data size. Size-adaptive at any scale — the
-    # same advisory-size coalescing as uncached plans; measured ~25%
-    # off the verified-dedup gate at sf0.1.
+    # Let AQE re-plan (coalesce/skew-split) inside cached plans too.
+    # run_job persists its stage frames, and Spark's default (false)
+    # pins a persisted frame's exchanges at the static partition count.
+    # Measured with perfbench on 4 cores, turning this off raised
+    # pipeline.geneHaplotype from 15 to 267 tasks and the phenotype
+    # report from 107 to 800 (traced seed-31 clinic job), and the
+    # median job latency over five seeds from 24 to 36 s (clinic_jobs)
+    # and from 13 to 26 s (cohort_hom).
     "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning": "true",
-    # Reference tables (gene_haplotype_variant etc.) are tiny; dims in the
-    # TPC-H-ish surface are small at any SF we test. 64 MB keeps them all
-    # on the broadcast path without hinting.
+    # The reference tables a job joins (gene_haplotype_variant, the
+    # genotype/phenotype and drug-recommendation tables) are
+    # PharmGKB-sized, a few MB at most. 64 MB keeps them all on the
+    # broadcast path without hints.
     "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
     # Arrow batches for applyInPandas / pandas_udf kernels.
     "spark.sql.execution.arrow.pyspark.enabled": "true",
@@ -36,20 +38,21 @@ ENGINE_CONFS: dict[str, str] = {
     # task overhead; 64 + AQE coalescing right-sizes every exchange at
     # runtime. Cluster deployments override per data volume.
     "spark.sql.shuffle.partitions": "64",
-    # No ANSI override: the engine must be correct under the Spark 4
-    # default (ansi=true, which the driver harness uses) AND under
-    # ansi=false. Every operator is written mode-neutral (F.get for
-    # positional indexing, no out-of-range element_at, no lossy casts),
-    # and the test suite runs with the default.
+    # No ANSI override: a job and its reports give the same rows under
+    # the Spark 4 default (ansi=true) and under ansi=false
+    # (tests/test_ansi_job.py). Operators are written mode-neutral
+    # (F.get for positional indexing, no out-of-range element_at, no
+    # lossy casts), and the test suite runs with the default.
     "spark.sql.session.timeZone": "UTC",
-    # Local-mode driver heap: the driver also hosts all 32 executor
-    # threads in local[N], so one JVM holds every shuffle buffer,
-    # broadcast, and codegen cache. 4g made long multi-query runs
-    # (bench's 50 queries in one session) GC-bound — heavy tail queries
-    # measured 3-5x slower than in a fresh session. 16g keeps GC off
-    # the critical path on the 128 GiB test hosts. Ignored when a
-    # session already exists; overridable per call; cluster deployments
-    # set executor memory their own way.
+    # Local-mode driver heap: in local[N] the driver JVM also hosts
+    # every executor thread, so it holds all shuffle buffers, the matrix
+    # broadcast and every stage frame a Pipeline persists. A single
+    # clinic or cohort job runs in 2g (perfbench sets that); 16g is the
+    # ceiling for a long-lived Pipeline, which keeps each job's
+    # persisted stages, and for reference-scale matrices
+    # (scripts/load_test.py builds one from 2M rows). The JVM takes only
+    # what it uses. Ignored when a session already exists; overridable
+    # per call; cluster deployments set executor memory their own way.
     "spark.driver.memory": "16g",
 }
 
@@ -63,7 +66,7 @@ def get_spark(
     """Build (or reuse) a SparkSession with engine defaults.
 
     ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, fallback 32)
-    so the same entry point works in the driver harness and in tests. On a
+    so the same entry point works in scripts and in tests. On a
     real cluster, pass ``master=None`` with a pre-configured environment —
     existing sessions are reused untouched.
     """

@@ -16,7 +16,7 @@ def spark():
     }
     # Mode-neutrality CI hook: SPARK_GRAFT_ANSI=false reruns the whole
     # suite under the non-default ANSI setting (default runs ansi=true,
-    # the Spark 4 / driver-harness mode).
+    # the Spark 4 default).
     ansi = os.environ.get("SPARK_GRAFT_ANSI")
     if ansi:
         confs["spark.sql.ansi.enabled"] = ansi
@@ -35,4 +35,12 @@ def rows(df, *cols):
         df = df.select(*cols)
     return sorted(
         tuple(r) for r in df.collect()
+    )
+
+
+def plan(df) -> str:
+    """The formatted physical plan, for plan-shape assertions."""
+    mode = df.sparkSession._jvm.org.apache.spark.sql.execution.ExplainMode
+    return df._jdf.queryExecution().explainString(
+        mode.fromString("formatted")
     )

@@ -13,7 +13,7 @@ from haplorec_spark.operators import (
     select_where_either_subset_of,
     select_where_subset_of,
 )
-from tests.conftest import rows
+from tests.conftest import plan, rows
 
 
 @pytest.fixture(scope="module")
@@ -109,3 +109,19 @@ def test_overlapping_group_keys_rejected(ab):
             a, b.withColumnRenamed("b", "a"), ["x", "y"],
             a_group_by=["a"], b_group_by=["a"],
         )
+
+
+def test_subset_plan_is_broadcast_join_and_hash_aggregate(ab):
+    # The match count is an equi-join plus an aggregate: never a
+    # nested-loop or cartesian join, whatever the set sizes.
+    a, b = ab
+    shape = plan(
+        select_where_subset_of(
+            a, b, ["x", "y"], a_group_by=["a"], b_group_by=["b"],
+            broadcast_a=True,
+        )
+    )
+    assert "BroadcastHashJoin" in shape
+    assert "HashAggregate" in shape
+    assert "BroadcastNestedLoopJoin" not in shape
+    assert "CartesianProduct" not in shape

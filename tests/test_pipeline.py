@@ -377,3 +377,32 @@ def test_het_snp_shared_by_two_genes(spark):
         (1, "patient1", "g1", "*1", "*2"),
         (1, "patient1", "g2", "*1", "*2"),
     ])
+
+
+# -- materialize: per-job partition overwrite --------------------------------
+
+def test_materialize_keeps_session_conf_and_other_jobs(
+    spark, unambiguous_ref, tmp_path
+):
+    key = "spark.sql.sources.partitionOverwriteMode"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "static")
+    try:
+        pipe = Pipeline(spark, unambiguous_ref)
+        wh = str(tmp_path / "wh")
+        base = [
+            ("A", "rs1", "A", "hom"), ("A", "rs2", "G", "hom"),
+            ("B", "rs1", "A", "hom"), ("B", "rs2", "G", "hom"),
+        ]
+        for job_id, patient in ((1, "patient1"), (2, "patient2")):
+            out = pipe.run_job(
+                job_id=job_id, variants=[(patient, *v) for v in base]
+            )
+            pipe.materialize(out, wh)
+            assert spark.conf.get(key) == "static"
+        genotype = spark.read.parquet(f"{wh}/job_patient_genotype")
+        assert rows(genotype, "job_id", "patient_id", "gene_name") == [
+            (1, "patient1", "g1"), (2, "patient2", "g1"),
+        ]
+    finally:
+        spark.conf.set(key, prev)

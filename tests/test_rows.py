@@ -7,14 +7,17 @@ Spark faces are checked for the same semantics on DataFrames.
 
 from __future__ import annotations
 
+from pyspark.sql import functions as F
+
 from haplorec_spark.operators.rows import (
+    collapse,
     collapse_rows,
     no_duplicates,
     no_duplicates_rows,
     report_can_collapse,
     report_merge,
 )
-from tests.conftest import rows
+from tests.conftest import plan, rows
 
 
 # -- RowTest.testNoDuplicates goldens ---------------------------------------
@@ -57,6 +60,16 @@ def test_no_duplicates_spark_matches_kernel(spark):
         for r in out.orderBy("seq").collect()
     ]
     assert got == no_duplicates_rows(NO_DUP_INPUT, NO_DUP_GROUPS)
+
+
+def test_no_duplicates_plan_is_window_not_cartesian(spark):
+    df = spark.createDataFrame(
+        [tuple(r[c] for c in "abcdefg") for r in NO_DUP_INPUT],
+        "a int, b int, c int, d int, e int, f int, g int",
+    ).withColumn("seq", F.monotonically_increasing_id())
+    shape = plan(no_duplicates(df, NO_DUP_GROUPS, order_by=["seq"]))
+    assert "Window" in shape
+    assert "CartesianProduct" not in shape
 
 
 # -- RowTest.testCollapse goldens -------------------------------------------
@@ -142,3 +155,52 @@ def test_report_merge_copies_non_null():
     last = {"a": 1, "b": None}
     report_merge(["a", "b"], last, {"b": 2, "a": None})
     assert last == {"a": 1, "b": 2}
+
+
+def test_collapse_spark_matches_kernel_per_partition(spark):
+    # Each partition_by group collapses on its own, in order_by order,
+    # as the kernel does on that group's rows; nothing merges across
+    # groups. The key and order columns ride along outside the header
+    # the collapse rules look at, as in the reports.
+    header = ["a", "b", "c"]
+    groups = {
+        1: [{"a": 1, "b": 2, "c": 3}, {"c": 3}, {"a": 1, "b": 2}],
+        2: [{"a": 4}, {"b": 5}, {"c": 6}, {"a": 7, "b": 8}],
+    }
+    df = spark.createDataFrame(
+        [
+            (g, seq, *(r.get(h) for h in header))
+            for g, rs in groups.items()
+            for seq, r in enumerate(rs)
+        ],
+        "g int, seq int, a int, b int, c int",
+    ).repartition(3)
+
+    # Local copies of the module-level rules: the executor's Python
+    # worker cannot import this test module.
+    def can(_hdr, last, cur):
+        return not (
+            {h for h in header if last[h] is not None}
+            & {h for h in header if cur[h] is not None}
+        )
+
+    def merge(_hdr, last, cur):
+        for h in header:
+            if last[h] is None:
+                last[h] = cur[h]
+
+    out = collapse(
+        df, order_by=["seq"], partition_by=["g"],
+        can_collapse=can, merge=merge,
+    )
+    got = rows(out, "g", *header)
+    want = sorted(
+        (g, *(r.get(h) for h in header))
+        for g, rs in groups.items()
+        for r in collapse_rows(
+            [{h: r.get(h) for h in header} for r in rs],
+            header, _non_null_can_collapse, _fill_merge,
+        )
+    )
+    assert got == want
+    assert got == [(1, 1, 2, 3), (1, 1, 2, 3), (2, 4, 5, 6), (2, 7, 8, None)]

@@ -4782,8 +4782,6 @@ def perplexity_buckets(
 
 # ------------------------------------------------------ query registration
 
-from haplorec_spark.queries import register, table  # noqa: E402
-
 
 def _duck_segmented_sql(text_expr: str) -> str:
     """DuckDB twin of :func:`segmented_text_sql` (RE2 spells the
@@ -4839,6 +4837,13 @@ def _duck_lang_scores() -> list[tuple[str, str]]:
         )
         for lang, lex in LANG_LEXICON.items()
     ]
+
+
+# Imported after the DuckDB twins above: importing queries runs its
+# module-level registrations, which read _duck_segmented_sql back from
+# this module, so the twins must exist when this module is imported
+# first.
+from haplorec_spark.queries import register, table  # noqa: E402
 
 
 @register(

@@ -28,6 +28,7 @@ product expression).
 from __future__ import annotations
 
 from dataclasses import dataclass
+from importlib import import_module
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -101,17 +102,37 @@ def register(name: str, sql: str | None, doc: str = ""):
 ADDED_AFTER_BUDGET = ("q_dedup_verified_pairs",)
 
 
+#: Modules whose import registers queries. registry() lists this
+#: module's queries first, then each operator module's in this order,
+#: each module's in source order, so the order does not depend on which
+#: module a process happened to import first.
+REGISTERING_MODULES = (
+    __name__,
+    "haplorec_spark.operators.text",
+    "haplorec_spark.operators.sampling",
+    "haplorec_spark.operators.dedup",
+    "haplorec_spark.operators.multimodal",
+    "haplorec_spark.operators.web",
+    "haplorec_spark.operators.similarity",
+    "haplorec_spark.operators.bloom",
+    "haplorec_spark.operators.html",
+)
+
+
 def registry() -> dict[str, Query]:
     # Import side-effect registration of the training-data operators.
-    import haplorec_spark.operators.bloom  # noqa: F401
-    import haplorec_spark.operators.dedup  # noqa: F401
-    import haplorec_spark.operators.html  # noqa: F401
-    import haplorec_spark.operators.multimodal  # noqa: F401
-    import haplorec_spark.operators.sampling  # noqa: F401
-    import haplorec_spark.operators.similarity  # noqa: F401
-    import haplorec_spark.operators.text  # noqa: F401
-    import haplorec_spark.operators.web  # noqa: F401
-    reg = dict(_REGISTRY)
+    for module in REGISTERING_MODULES[1:]:
+        import_module(module)
+    reg = {
+        q.name: q
+        for q in sorted(
+            _REGISTRY.values(),
+            key=lambda q: (
+                REGISTERING_MODULES.index(q.fn.__module__),
+                q.fn.__code__.co_firstlineno,
+            ),
+        )
+    }
     for name in ADDED_AFTER_BUDGET:
         q = reg.pop(name, None)
         if q is not None:

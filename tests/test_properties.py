@@ -354,3 +354,404 @@ def test_haplotype_calls_match_matrix_kernel(spark, n_haps, n_snps, seed):
     assert rows(out["geneHaplotype"], *key, "haplotype_name") == sorted(
         want_calls)
     assert rows(out["novelHaplotype"], *key) == sorted(want_novel)
+
+
+edge_lists = st.lists(
+    st.tuples(
+        st.integers(min_value=0, max_value=15),
+        st.integers(min_value=0, max_value=15),
+    ).filter(lambda t: t[0] != t[1]),
+    min_size=1,
+    max_size=20,
+)
+
+
+@SLOW
+@given(edges=edge_lists)
+def test_dedup_clusters_matches_bfs_model(spark, edges):
+    """Union-find labels = BFS connected components with min-id
+    canonicals, on random small graphs."""
+    from haplorec_spark.operators.dedup import dedup_clusters
+
+    pairs = spark.createDataFrame(
+        edges, "doc_id_a long, doc_id_b long"
+    )
+    got = {
+        (r["doc_id"], r["canonical_id"])
+        for r in dedup_clusters(pairs).collect()
+    }
+
+    adj: dict[int, set[int]] = {}
+    for a, b in edges:
+        adj.setdefault(a, set()).add(b)
+        adj.setdefault(b, set()).add(a)
+    want = set()
+    seen: set[int] = set()
+    for start in adj:
+        if start in seen:
+            continue
+        comp, frontier = {start}, [start]
+        while frontier:
+            node = frontier.pop()
+            for nxt in adj[node]:
+                if nxt not in comp:
+                    comp.add(nxt)
+                    frontier.append(nxt)
+        seen |= comp
+        keeper = min(comp)
+        want |= {(n, keeper) for n in comp}
+    assert got == want
+
+
+# words from a tiny alphabet force shared lines/ngrams across docs
+_line_words = st.sampled_from(["aa", "bb", "cc", "dd"])
+_doc_lines = st.lists(
+    st.lists(_line_words, min_size=1, max_size=4).map(" ".join),
+    min_size=0, max_size=5,
+)
+
+
+@SLOW
+@given(docs=st.lists(_doc_lines, min_size=1, max_size=6))
+def test_boilerplate_adaptive_paths_agree(spark, docs):
+    """The broadcast and explode-and-regroup paths of
+    strip_boilerplate_lines must return identical rows on ANY input —
+    the adaptive bound may only change the plan, never the result."""
+    from haplorec_spark.operators.text import strip_boilerplate_lines
+
+    frame = spark.createDataFrame(
+        [(i, "\n".join(lines)) for i, lines in enumerate(docs)],
+        "doc_id long, text string",
+    )
+    small = sorted(
+        tuple(r)
+        for r in strip_boilerplate_lines(
+            frame, max_broadcast_lines=1_000_000
+        ).collect()
+    )
+    large = sorted(
+        tuple(r)
+        for r in strip_boilerplate_lines(
+            frame, max_broadcast_lines=0
+        ).collect()
+    )
+    assert small == large
+
+
+@SLOW
+@given(docs=st.lists(
+    st.lists(_line_words, min_size=0, max_size=8).map(" ".join),
+    min_size=1, max_size=6,
+))
+def test_dup_span_adaptive_paths_agree(spark, docs):
+    """Broadcast vs shuffle join back of the duplicated-n-gram set:
+    identical spans on any input."""
+    from haplorec_spark.operators.dedup import duplicate_ngram_spans
+
+    frame = spark.createDataFrame(
+        [(i, t) for i, t in enumerate(docs)], "doc_id long, text string"
+    )
+    small = sorted(
+        tuple(r)
+        for r in duplicate_ngram_spans(
+            frame, n=2, min_df=2, max_broadcast_grams=1_000_000
+        ).collect()
+    )
+    large = sorted(
+        tuple(r)
+        for r in duplicate_ngram_spans(
+            frame, n=2, min_df=2, max_broadcast_grams=0
+        ).collect()
+    )
+    assert small == large
+
+
+_doc_texts = st.lists(
+    st.text(
+        alphabet=st.sampled_from(list("ab c")), min_size=0, max_size=40
+    ),
+    min_size=1,
+    max_size=6,
+)
+
+
+@SLOW
+@given(texts=_doc_texts, chunk=st.integers(1, 7))
+def test_chunk_tiling_reconstructs_documents(spark, texts, chunk):
+    """Non-overlapping chunks are a partition of the word array:
+    re-joining a document's chunk_texts in chunk_ix order reproduces
+    the original text byte-for-byte (split/join on single spaces
+    round-trips, including empty words from doubled spaces)."""
+    from haplorec_spark.operators.text import chunk_documents
+
+    docs = spark.createDataFrame(
+        list(enumerate(texts)), "doc_id long, text string"
+    )
+    got: dict[int, list[tuple[int, str]]] = {}
+    for r in chunk_documents(docs, chunk_size=chunk).collect():
+        got.setdefault(r["doc_id"], []).append(
+            (r["chunk_ix"], r["chunk_text"])
+        )
+    for i, text in enumerate(texts):
+        parts = [t for _, t in sorted(got[i])]
+        assert " ".join(parts) == text
+        # every chunk except possibly the last is exactly chunk words
+        for t in parts[:-1]:
+            assert len(t.split(" ")) == chunk
+
+
+@SLOW
+@given(
+    texts=_doc_texts,
+    chunk=st.integers(2, 6),
+    stride=st.integers(1, 6),
+)
+def test_chunk_sliding_matches_python_model(spark, texts, chunk, stride):
+    """Overlapping windows match the plain-Python slicing model."""
+    from haplorec_spark.operators.text import chunk_documents
+
+    docs = spark.createDataFrame(
+        list(enumerate(texts)), "doc_id long, text string"
+    )
+    got = sorted(
+        tuple(r)
+        for r in chunk_documents(
+            docs, chunk_size=chunk, stride=stride
+        ).collect()
+    )
+    want = []
+    for i, text in enumerate(texts):
+        ws = text.split(" ")
+        for ix, start in enumerate(range(0, max(len(ws) - 1, 0) + 1, stride)):
+            cw = ws[start : start + chunk]
+            want.append((i, ix, start, len(cw), " ".join(cw)))
+    assert got == sorted(want)
+
+
+# --------------------------------------------------- normalization invariants
+
+_norm_text = st.text(
+    alphabet=st.sampled_from(
+        list("abXY 09.!?,-\t\n") + ["é", "À".lower(), "ñ", "ç"]
+    ),
+    min_size=0,
+    max_size=40,
+)
+
+
+@given(texts=st.lists(_norm_text, min_size=1, max_size=8))
+@SLOW
+def test_normalize_text_is_idempotent(spark, texts):
+    """normalize(normalize(x)) == normalize(x) under every knob — the
+    invariant that keeps dedup hashes stable when a corpus is
+    re-normalized on re-ingest."""
+    from haplorec_spark.operators.text import normalize_text
+
+    docs = spark.createDataFrame(
+        list(enumerate(texts)), "doc_id int, text string"
+    )
+    kw = dict(fold_accents=True, strip_punctuation=True, fold_digits=True)
+    once = normalize_text(docs, **kw)
+    twice = normalize_text(
+        once.withColumnRenamed("text_norm", "text"), **kw
+    )
+    a = sorted(tuple(r) for r in once.collect())
+    b = sorted(tuple(r) for r in twice.collect())
+    assert a == b
+
+
+@given(
+    n_cand=st.integers(min_value=0, max_value=12),
+    k=st.integers(min_value=1, max_value=6),
+)
+@SLOW
+def test_refine_topk_is_contained_in_candidates(spark, n_cand, k):
+    """Refine never invents a neighbor: output pairs are a subset of
+    the candidate pairs, ranks are 1..min(k, candidates-per-probe),
+    and distances are the exact pairwise values."""
+    import math
+
+    from pyspark.sql import functions as F
+
+    from haplorec_spark.operators.similarity import refine_topk
+
+    vecs = [
+        (i, [float((i * 7 + j * 3) % 5 - 2) for j in range(4)])
+        for i in range(8)
+    ]
+    emb = spark.createDataFrame(vecs, "vec_id int, embedding array<float>")
+    cand_pairs = sorted(
+        {((c * 3) % 3, (c * 5) % 8) for c in range(n_cand)}
+    )
+    cand_pairs = [(p, n) for p, n in cand_pairs if p != n]
+    if not cand_pairs:
+        return
+    cand = spark.createDataFrame(
+        cand_pairs, "probe_id int, neighbor_id int"
+    )
+    probes = emb.filter(F.col("vec_id") < 3)
+    out = refine_topk(cand, emb, probes, k=k).collect()
+    got_pairs = {(r["probe_id"], r["neighbor_id"]) for r in out}
+    assert got_pairs <= set(cand_pairs)
+    by_probe = {}
+    for r in out:
+        by_probe.setdefault(r["probe_id"], []).append(r)
+    vd = dict(vecs)
+    for p, rows in by_probe.items():
+        n_avail = sum(1 for a, _ in cand_pairs if a == p)
+        assert sorted(r["rank"] for r in rows) == list(
+            range(1, min(k, n_avail) + 1)
+        )
+        for r in rows:
+            exact = round(
+                sum(
+                    (a - b) ** 2
+                    for a, b in zip(vd[p], vd[r["neighbor_id"]])
+                ),
+                6,
+            )
+            assert math.isclose(r["dist2"], exact, abs_tol=1e-9)
+
+
+# --------------------------------------------------- BPE rung equivalence
+
+# tiny alphabet + short words force heavy symbol overlap, count ties,
+# and merged-symbol collisions — exactly the hazards the batched
+# distributed rung's acceptance proof (_accept_merge_prefix) must
+# survive while staying bit-identical to sequential training
+bpe_words = st.lists(
+    st.text(alphabet="abc", min_size=1, max_size=5),
+    min_size=1,
+    max_size=12,
+)
+
+
+@SLOW
+@given(corpus=st.lists(bpe_words, min_size=1, max_size=4))
+def test_bpe_rungs_equal_replica_on_random_corpora(spark, corpus):
+    from haplorec_spark.operators.bpe import train_bpe
+    from tests.test_bpe import _ref_train, _ref_word_counts
+
+    texts = [" ".join(ws) for ws in corpus]
+    docs = spark.createDataFrame(
+        list(enumerate(texts)), "doc_id int, text string"
+    )
+    want = [
+        (i, l, r, l + r, c)
+        for i, (l, r, c) in enumerate(
+            _ref_train(_ref_word_counts(texts), 12)
+        )
+    ]
+    drv = [
+        tuple(r)
+        for r in train_bpe(docs, n_merges=12).orderBy("merge_rank").collect()
+    ]
+    assert drv == want
+    bat = [
+        tuple(r)
+        for r in train_bpe(
+            docs, n_merges=12, max_driver_vocab=None, merge_batch=6
+        ).orderBy("merge_rank").collect()
+    ]
+    assert bat == want
+
+
+# -------------------------------------------- round-10 new semantics
+
+# Small alphabets force step repeats, ties, and budget boundaries.
+_ev_lists = st.lists(
+    st.tuples(
+        st.sampled_from(["A", "B", "C", "X"]),  # event type (X = noise)
+        st.integers(min_value=0, max_value=12),  # minute offset
+    ),
+    min_size=0,
+    max_size=10,
+)
+
+
+def _brute_retry_depth(events, steps, within_min):
+    """Max depth over ALL in-order chains whose span fits the budget —
+    the windowFunnel definition, by exhaustive DFS over the sorted
+    event list (events = [(type, minute, eid)] sorted by (minute, eid))."""
+    best = 0
+
+    def extend(start_ix, level, t0):
+        nonlocal best
+        best = max(best, level)
+        if level == len(steps):
+            return
+        for j in range(start_ix, len(events)):
+            et, t, _ = events[j]
+            if et != steps[level]:
+                continue
+            anchor = t if level == 0 else t0
+            if level > 0 and (t - t0) * 60 > within_min * 60:
+                continue
+            extend(j + 1, level + 1, anchor)
+
+    extend(0, 0, None)
+    return best
+
+
+@SLOW
+@given(evs=_ev_lists)
+def test_funnel_retry_matches_exhaustive_search(spark, evs):
+    from datetime import datetime, timedelta
+
+    from haplorec_spark.operators.funnel import funnel_depth
+
+    steps = ["A", "B", "C"]
+    within_min = 5
+    base = datetime(2024, 1, 1)
+    rows_ = [
+        (i, base + timedelta(minutes=m), 1, et, 0.0, "{}")
+        for i, (et, m) in enumerate(evs)
+    ]
+    df = spark.createDataFrame(
+        rows_,
+        "event_id BIGINT, ts TIMESTAMP, user_id BIGINT, "
+        "event_type STRING, value DOUBLE, props STRING",
+    )
+    got = funnel_depth(
+        df, steps, within_seconds=within_min * 60, retry=True
+    ).collect()
+    ordered = sorted(
+        ((et, m, i) for i, (et, m) in enumerate(evs)),
+        key=lambda x: (x[1], x[2]),
+    )
+    want = _brute_retry_depth(ordered, steps, within_min)
+    if not any(et in steps for et, _ in evs):
+        assert got == []  # no funnel-step events: no row
+    else:
+        assert len(got) == 1 and got[0]["depth"] == want
+
+
+@SLOW
+@given(
+    fam=st.integers(min_value=0, max_value=8),
+    uniq=st.integers(min_value=0, max_value=4),
+    cap=st.integers(min_value=2, max_value=5),
+)
+def test_lsh_cap_components_match_uncapped(spark, fam, uniq, cap):
+    """For ANY family size and cap, capped and uncapped pair sets must
+    span identical connected components."""
+    from haplorec_spark.operators.dedup import (
+        dedup_clusters,
+        lsh_candidate_pairs,
+    )
+
+    rows_ = [
+        (i, "shared boilerplate text body repeated across the family")
+        for i in range(fam)
+    ] + [
+        (100 + i, f"unique document number {i} with its own distinct words")
+        for i in range(uniq)
+    ]
+    if not rows_:
+        return
+    docs = spark.createDataFrame(rows_, "doc_id long, text string")
+    capped = lsh_candidate_pairs(docs, hot_bucket_cap=cap)
+    exact = lsh_candidate_pairs(docs, hot_bucket_cap=None)
+    got = sorted(map(tuple, dedup_clusters(capped).collect()))
+    want = sorted(map(tuple, dedup_clusters(exact).collect()))
+    assert got == want

@@ -196,3 +196,48 @@ def test_invalid_short_rows_error(spark, tmp_path):
     df = stage_source(spark, "genotype", str(p))
     with pytest.raises(Exception, match="FAILED_READ_FILE|Malformed"):
         df.collect()
+
+
+def test_jsonl_roundtrip(spark, tmp_path):
+    from haplorec_spark.sources import jsonl_sink, jsonl_source
+
+    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    out = str(tmp_path / "docs_jsonl")
+    jsonl_sink(docs, out, compression="none")
+    back = jsonl_source(spark, out, "doc_id BIGINT, lang STRING, text STRING")
+    assert rows(back, "doc_id", "text") == rows(docs, "doc_id", "text")
+    # corrupt-only queries are rejected by Spark; reference a data
+    # column alongside the corrupt column (see jsonl_source docstring)
+    clean = back.filter(back["_corrupt_record"].isNull()).select("doc_id")
+    assert len(clean.collect()) == docs.count()
+
+
+def test_jsonl_corrupt_record_policy(spark, tmp_path):
+    from haplorec_spark.sources import jsonl_source
+
+    f = tmp_path / "mixed.jsonl"
+    f.write_text(
+        '{"doc_id": 1, "text": "ok"}\n'
+        "this is not json\n"
+        '{"doc_id": 2, "text": "also ok"}\n'
+    )
+    schema = "doc_id BIGINT, text STRING"
+
+    permissive = jsonl_source(spark, str(f), schema)
+    quarantined = permissive.filter(
+        permissive["_corrupt_record"].isNotNull()
+    ).select("doc_id", "_corrupt_record")
+    assert permissive.count() == 3
+    assert len(quarantined.collect()) == 1
+    assert rows(
+        permissive.filter(permissive["_corrupt_record"].isNull()), "doc_id"
+    ) == [(1,), (2,)]
+
+    dropped = jsonl_source(spark, str(f), schema, mode="DROPMALFORMED")
+    assert "_corrupt_record" not in dropped.columns
+    assert rows(dropped, "doc_id") == [(1,), (2,)]
+
+    import pyspark.errors
+
+    with pytest.raises(Exception):
+        jsonl_source(spark, str(f), schema, mode="FAILFAST").count()

@@ -1239,6 +1239,15 @@ def simhash32(
     token array — was MEASURED 2.2× slower at sf0.1: HOFs evaluate
     interpreted; that lesson is why the round-13 kernel is numpy, not
     HOFs.)
+
+    The kernel declares ``simhash`` non-nullable, which is true: it
+    emits an integer for every live row and drops ``None`` texts
+    instead. A nullable field would let the optimizer infer
+    ``isnotnull(simhash)`` from the banded self-join of
+    :func:`simhash_near_duplicates` and push it under the two join
+    sides only, so the star-edge side's grouped subtree would no
+    longer match theirs, its exchange could not be reused, and the
+    kernel and its shuffle would run twice.
     """
     if not kernel:
         return _simhash32_expr(docs, text_col=text_col, id_col=id_col)
@@ -1249,7 +1258,7 @@ def simhash32(
     )
     id_field = sel.schema[id_col]
     out_type = T.StructType(
-        [id_field, T.StructField("simhash", T.LongType())]
+        [id_field, T.StructField("simhash", T.LongType(), nullable=False)]
     )
 
     def kern(batches):
@@ -1343,7 +1352,10 @@ def simhash_near_duplicates(
     # three consumers (star edges + both banded-join sides) share the
     # grouped subtree, whose shuffle AQE's exchange reuse materializes
     # once (the bloom-probe contract, pinned by
-    # test_simhash_collapse_reuses_signature_exchange); measured
+    # test_simhash_collapse_reuses_signature_exchange). The three
+    # subtrees stay identical only because simhash32 declares simhash
+    # non-nullable; see its docstring for how a nullable column makes
+    # the kernel run twice. Measured
     # 1.75 s vs the literal path's 1.51 s at sf0.1. A family's id
     # array lives in one row — the lsh_candidate_pairs grouped-path
     # tradeoff, bounded by the largest duplicate family.

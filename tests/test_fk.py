@@ -25,10 +25,30 @@ def test_assign_ids_large_path_no_single_partition_exchange(spark):
     per-partition record numbers, no global window (Exchange
     SinglePartition) anywhere in the plan."""
     df = spark.read.parquet("/root/testdata/sf0.001/customer.parquet")
+    # assign_ids runs its range shuffle inside a localCheckpoint, so the
+    # returned frame plans as a scan of the checkpoint: read the plans of
+    # every SQL execution the call ran, plus the returned frame's own.
+    # The status store is filled by an asynchronous listener, so drain
+    # the listener bus before each read.
+    store = spark._jsparkSession.sharedState().statusStore()
+    listener_bus = spark.sparkContext._jsc.sc().listenerBus()
+
+    def executions():
+        it = store.executionsList().iterator()
+        while it.hasNext():
+            yield it.next()
+
+    listener_bus.waitUntilEmpty()
+    last_before = max((e.executionId() for e in executions()), default=-1)
     out = assign_ids(df, ["c_name"], id_column="cid", small_key_limit=10)
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange SinglePartition" not in plan
-    assert "rangepartitioning" in plan
+    listener_bus.waitUntilEmpty()
+    plans = [out._jdf.queryExecution().executedPlan().toString()] + [
+        e.physicalPlanDescription()
+        for e in executions()
+        if e.executionId() > last_before
+    ]
+    assert not any("Exchange SinglePartition" in p for p in plans)
+    assert any("rangepartitioning" in p for p in plans)
     # dense, 1-based, ordered by key
     got = [r.cid for r in out.orderBy("c_name").collect()]
     assert got == list(range(1, len(got) + 1))

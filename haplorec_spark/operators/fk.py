@@ -38,7 +38,9 @@ def assign_ids(
     regardless of partitioning.
 
     Adaptive two-phase: the distinct key count is measured first (one
-    job over the persisted key set — its result is reused either way).
+    job over the persisted key set — its result is reused either way),
+    as per-partition counts summed on the driver: a plain ``count()``
+    merges its partial counts through a single-partition Exchange.
 
     * ``<= small_key_limit`` keys: a single-partition ordered window.
       This is the reference's own regime (load_dsv.py:90-105 loads a
@@ -63,7 +65,10 @@ def assign_ids(
     # distinct. Trade: a lost executor cannot recompute its slice; the
     # frame is dimension-sized, never fact-sized.
     keys = dim.select(*natural_key).distinct().localCheckpoint()
-    n_keys = keys.count()
+    n_keys = sum(
+        r["count"]
+        for r in keys.groupBy(F.spark_partition_id()).count().collect()
+    )
 
     if n_keys <= small_key_limit:
         w = Window.orderBy(*[F.col(c) for c in natural_key])

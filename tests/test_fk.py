@@ -3,12 +3,14 @@ semantics)."""
 
 from __future__ import annotations
 
+import re
+
 from haplorec_spark.operators.fk import (
     assign_ids,
     collapse_by_key,
     resolve_fk_ids,
 )
-from tests.conftest import rows
+from tests.conftest import executed_plans, plan, rows
 
 
 def test_assign_ids_deterministic(spark):
@@ -28,26 +30,18 @@ def test_assign_ids_large_path_no_single_partition_exchange(spark):
     # assign_ids runs its range shuffle inside a localCheckpoint, so the
     # returned frame plans as a scan of the checkpoint: read the plans of
     # every SQL execution the call ran, plus the returned frame's own.
-    # The status store is filled by an asynchronous listener, so drain
-    # the listener bus before each read.
-    store = spark._jsparkSession.sharedState().statusStore()
-    listener_bus = spark.sparkContext._jsc.sc().listenerBus()
-
-    def executions():
-        it = store.executionsList().iterator()
-        while it.hasNext():
-            yield it.next()
-
-    listener_bus.waitUntilEmpty()
-    last_before = max((e.executionId() for e in executions()), default=-1)
-    out = assign_ids(df, ["c_name"], id_column="cid", small_key_limit=10)
-    listener_bus.waitUntilEmpty()
-    plans = [out._jdf.queryExecution().executedPlan().toString()] + [
-        e.physicalPlanDescription()
-        for e in executions()
-        if e.executionId() > last_before
-    ]
-    assert not any("Exchange SinglePartition" in p for p in plans)
+    out, plans = executed_plans(
+        spark,
+        lambda: assign_ids(
+            df, ["c_name"], id_column="cid", small_key_limit=10
+        ),
+    )
+    plans.append(plan(out))
+    # formatted plans print an Exchange's partitioning in its details
+    single_partition = re.compile(
+        r"^\(\d+\) Exchange\n(?:.+\n)*?Arguments: SinglePartition", re.M
+    )
+    assert not any(single_partition.search(p) for p in plans)
     assert any("rangepartitioning" in p for p in plans)
     # dense, 1-based, ordered by key
     got = [r.cid for r in out.orderBy("c_name").collect()]

@@ -8,11 +8,13 @@ Spark-first:
   table's reported columns enter the chain under a ``{alias}__`` prefix
   (the reference renames to "table.column", Sql.groovy:626-650).
 * The disjunctive geneHaplotype join — ``jpgh.haplotype_name = hap1 OR
-  ... = hap2`` (util/pipeline/Report.groovy:72-85) — would be a
-  BroadcastNestedLoop in Spark; :func:`or_slot_join` rewrites it as the
-  union of two guarded equi-joins plus an anti-join null branch, exactly
-  preserving OR-match multiplicity (a both-slots match — hap1 = hap2 —
-  emits once).
+  ... = hap2`` (util/pipeline/Report.groovy:72-85) — is one LEFT join
+  (:func:`or_slot_join`): the OR sits beside four equi-keys (job,
+  patient, gene, het_combo), so Catalyst plans a hash join and checks
+  the OR on each matched pair, never a nested loop.
+* The reports read the stage frames as given: ``Pipeline.run_job``
+  persists the ones worth caching (``Pipeline.PERSISTED_STAGES``), and
+  in production they are the parquet stage tables.
 * The condensed post-processing chain (noDuplicates -> filter ->
   collapse -> fill -> changeKeys, sql/Report.groovy:94-170) maps onto
   operators.rows with an EXPLICIT total order: a ``_seq`` row number
@@ -67,25 +69,6 @@ def _alias_header(prefixed: str) -> str:
     return HEADER_ALIASES.get(bare, bare)
 
 
-def _pin_stages(
-    stages: dict[str, DataFrame], names: Sequence[str]
-) -> dict[str, DataFrame]:
-    """Materialize the stage inputs the report consumes.
-
-    The report chain references some stages several times (the OR-join
-    rewrite alone uses its left side three times); over an
-    un-materialized in-memory pipeline lineage that multiplies the whole
-    upstream plan tree combinatorially. In production the stages are
-    parquet tables (Pipeline.materialize) and this is moot; for
-    DataFrame-to-DataFrame use an eager localCheckpoint pins each stage
-    to its computed partitions, exactly like the reference reading back
-    its materialized MySQL stage tables.
-    """
-    return {
-        name: stages[name].localCheckpoint(eager=True) for name in names
-    }
-
-
 def left_join_prefixed(
     chain: DataFrame,
     right: DataFrame,
@@ -119,42 +102,26 @@ def or_slot_join(
     prefix: str,
     carry: Sequence[str],
 ) -> DataFrame:
-    """J7 rewrite: LEFT join with ``right_match_col = slot1 OR = slot2``.
+    """LEFT-join ``right`` onto the chain ON the ``common`` equalities AND
+    ``(slot1 = right_match_col OR slot2 = right_match_col)``, importing
+    ``carry`` as in :func:`left_join_prefixed`.
 
-    Union of two inner equi-joins — slot 2 guarded with ``slot1 !=
-    slot2`` so a row matching both slots emits once, like the OR — plus
-    the no-match rows recovered by an anti-join on the chain's join-key
-    tuple (legal because the match outcome is a function of that tuple).
-    All joins are equi-joins: shuffle-hash/broadcast planned, no BNL.
+    SQL semantics: each matching right row emits once (a row matching
+    both slots, hap1 = hap2, too); a chain row with no match, or a null
+    common key, is kept once with null imports.
     """
     s1, s2 = slot_cols
-    key_cols = [lc for lc, _ in common] + [s1, s2]
-
-    def inner(slot_col: str, guard) -> DataFrame:
-        rsel = [F.col(rc).alias(f"_k_{rc}") for _, rc in common] + [
-            F.col(right_match_col).alias("_k_slot")
-        ] + [F.col(c).alias(f"{prefix}__{c}") for c in carry]
-        r = right.select(*rsel)
-        cond = F.col(slot_col) == F.col("_k_slot")
-        for lc, rc in common:
-            cond = cond & (F.col(lc) == F.col(f"_k_{rc}"))
-        base = chain if guard is None else chain.filter(guard)
-        return base.join(r, cond, "inner").drop(
-            *[f"_k_{rc}" for _, rc in common], "_k_slot"
-        )
-
-    m1 = inner(s1, None)
-    m2 = inner(s2, F.col(s1) != F.col(s2))
-    matched = m1.unionByName(m2)
-    unmatched = chain.join(
-        matched.select(*key_cols).distinct(), on=key_cols, how="left_anti"
+    r = right.select(
+        *[F.col(rc).alias(f"_k_{rc}") for _, rc in common],
+        F.col(right_match_col).alias("_k_slot"),
+        *[F.col(c).alias(f"{prefix}__{c}") for c in carry],
     )
-    for c in carry:
-        unmatched = unmatched.withColumn(
-            f"{prefix}__{c}",
-            F.lit(None).cast(dict(right.dtypes)[c]),
-        )
-    return matched.unionByName(unmatched)
+    cond = (chain[s1] == F.col("_k_slot")) | (chain[s2] == F.col("_k_slot"))
+    for lc, rc in common:
+        cond = cond & (chain[lc] == F.col(f"_k_{rc}"))
+    return chain.join(r, cond, "left").drop(
+        *[f"_k_{rc}" for _, rc in common], "_k_slot"
+    )
 
 
 def _condense(
@@ -199,29 +166,9 @@ def phenotype_drug_recommendation_report(
     """util/pipeline/Report.groovy:54-114 — how each phenotype-based drug
     recommendation was called, from recommendation back to causal
     variants, condensed."""
-    stages = _pin_stages(
-        stages,
-        ["phenotypeDrugRecommendation", "genePhenotype", "genotype",
-         "geneHaplotype", "variant"],
+    chain = _recommendation_head(
+        stages["phenotypeDrugRecommendation"], ref, job_id
     )
-    jppdr = stages["phenotypeDrugRecommendation"].filter(
-        F.col("job_id") == job_id
-    )
-    chain = jppdr.select(
-        "job_id", "patient_id", "het_combo", "het_combos",
-        "drug_recommendation_id",
-    )
-    dr = ref.drug_recommendation
-    if dr is not None:
-        chain = left_join_prefixed(
-            chain, dr, [("drug_recommendation_id", "id")], "dr",
-            ["drug_name", "recommendation"],
-        )
-    else:
-        chain = chain.withColumn("dr__drug_name", F.lit(None).cast("string"))
-        chain = chain.withColumn(
-            "dr__recommendation", F.lit(None).cast("string")
-        )
     chain = left_join_prefixed(
         chain, ref.gene_phenotype_drug_recommendation,
         [("drug_recommendation_id", "drug_recommendation_id")], "gpdr",
@@ -249,25 +196,12 @@ def phenotype_drug_recommendation_report(
          ("het_combo", "het_combo")],
         "jpg", ["gene_name", "haplotype_name1", "haplotype_name2"],
     )
-    return _report_tail(chain, stages, ref, gene_col="jpg__gene_name",
-                        head_select=[
-                            "patient_id", "drug_recommendation_id",
-                            "het_combo", "het_combos",
-                            "dr__drug_name", "dr__recommendation",
+    return _report_tail(chain, stages, ref,
+                        mid_select=[
                             "jpgp__gene_name", "jpgp__phenotype_name",
                             "jpg__haplotype_name1", "jpg__haplotype_name2",
                         ],
-                        head_dedup={
-                            "jppdr": (
-                                ["patient_id", "drug_recommendation_id",
-                                 "het_combo"],
-                                ["patient_id", "drug_recommendation_id",
-                                 "het_combo", "het_combos"],
-                            ),
-                            "dr": (
-                                ["drug_recommendation_id", "patient_id"],
-                                ["dr__drug_name", "dr__recommendation"],
-                            ),
+                        mid_dedup={
                             "jpgp": (
                                 ["job_id", "patient_id", "jpgp__gene_name",
                                  "jpgp__phenotype_name", "het_combo",
@@ -282,13 +216,7 @@ def phenotype_drug_recommendation_report(
                                 ["jpg__haplotype_name1",
                                  "jpg__haplotype_name2"],
                             ),
-                        },
-                        order_head=[
-                            "patient_id", "drug_recommendation_id",
-                            "het_combo", "jpgp__gene_name",
-                            "jpgp__phenotype_name", "jpg__haplotype_name1",
-                            "jpg__haplotype_name2",
-                        ])
+                        })
 
 
 def genotype_drug_recommendation_report(
@@ -296,29 +224,9 @@ def genotype_drug_recommendation_report(
 ) -> DataFrame:
     """util/pipeline/Report.groovy:119-176 — genotype-based variant of
     the condensed recommendation report."""
-    stages = _pin_stages(
-        stages,
-        ["genotypeDrugRecommendation", "genotype", "geneHaplotype",
-         "variant"],
+    chain = _recommendation_head(
+        stages["genotypeDrugRecommendation"], ref, job_id
     )
-    jpgdr = stages["genotypeDrugRecommendation"].filter(
-        F.col("job_id") == job_id
-    )
-    chain = jpgdr.select(
-        "job_id", "patient_id", "het_combo", "het_combos",
-        "drug_recommendation_id",
-    )
-    dr = ref.drug_recommendation
-    if dr is not None:
-        chain = left_join_prefixed(
-            chain, dr, [("drug_recommendation_id", "id")], "dr",
-            ["drug_name", "recommendation"],
-        )
-    else:
-        chain = chain.withColumn("dr__drug_name", F.lit(None).cast("string"))
-        chain = chain.withColumn(
-            "dr__recommendation", F.lit(None).cast("string")
-        )
     chain = left_join_prefixed(
         chain, ref.genotype_drug_recommendation,
         [("drug_recommendation_id", "drug_recommendation_id")], "gdr",
@@ -332,25 +240,12 @@ def genotype_drug_recommendation_report(
          ("het_combo", "het_combo")],
         "jpg", ["gene_name", "haplotype_name1", "haplotype_name2"],
     )
-    return _report_tail(chain, stages, ref, gene_col="jpg__gene_name",
-                        head_select=[
-                            "patient_id", "drug_recommendation_id",
-                            "het_combo", "het_combos",
-                            "dr__drug_name", "dr__recommendation",
+    return _report_tail(chain, stages, ref,
+                        mid_select=[
                             "jpg__gene_name", "jpg__haplotype_name1",
                             "jpg__haplotype_name2",
                         ],
-                        head_dedup={
-                            "jpgdr": (
-                                ["patient_id", "drug_recommendation_id",
-                                 "het_combo"],
-                                ["patient_id", "drug_recommendation_id",
-                                 "het_combo", "het_combos"],
-                            ),
-                            "dr": (
-                                ["drug_recommendation_id", "patient_id"],
-                                ["dr__drug_name", "dr__recommendation"],
-                            ),
+                        mid_dedup={
                             "jpg": (
                                 ["job_id", "patient_id", "jpg__gene_name",
                                  "jpg__haplotype_name1",
@@ -359,29 +254,46 @@ def genotype_drug_recommendation_report(
                                 ["jpg__gene_name", "jpg__haplotype_name1",
                                  "jpg__haplotype_name2"],
                             ),
-                        },
-                        order_head=[
-                            "patient_id", "drug_recommendation_id",
-                            "het_combo", "jpg__gene_name",
-                            "jpg__haplotype_name1", "jpg__haplotype_name2",
-                        ])
+                        })
+
+
+def _recommendation_head(
+    recommendations: DataFrame, ref: ReferenceTables, job_id: int
+) -> DataFrame:
+    """Shared head of both reports: the job's drug-recommendation stage
+    rows LEFT-joined to drug_recommendation (null drug and text when the
+    reference has no such table)."""
+    chain = recommendations.filter(F.col("job_id") == job_id).select(
+        "job_id", "patient_id", "het_combo", "het_combos",
+        "drug_recommendation_id",
+    )
+    if ref.drug_recommendation is None:
+        return chain.withColumns({
+            "dr__drug_name": F.lit(None).cast("string"),
+            "dr__recommendation": F.lit(None).cast("string"),
+        })
+    return left_join_prefixed(
+        chain, ref.drug_recommendation, [("drug_recommendation_id", "id")],
+        "dr", ["drug_name", "recommendation"],
+    )
 
 
 def _report_tail(
     chain: DataFrame,
     stages: dict[str, DataFrame],
     ref: ReferenceTables,
-    gene_col: str,
-    head_select: Sequence[str],
-    head_dedup: dict[str, tuple[Sequence[str], Sequence[str]]],
-    order_head: Sequence[str],
+    mid_select: Sequence[str],
+    mid_dedup: dict[str, tuple[Sequence[str], Sequence[str]]],
 ) -> DataFrame:
     """Shared tail of both reports: geneHaplotype OR-join -> ghv ->
-    variant, then the condensed post-processing."""
+    variant, then the condensed post-processing. The report's own
+    columns (``mid_select``, deduplicated by ``mid_dedup``) are reported
+    and sorted between the shared head's (:func:`_recommendation_head`)
+    and the tail's."""
     chain = or_slot_join(
         chain, stages["geneHaplotype"],
         common=[("job_id", "job_id"), ("patient_id", "patient_id"),
-                (gene_col, "gene_name"), ("het_combo", "het_combo")],
+                ("jpg__gene_name", "gene_name"), ("het_combo", "het_combo")],
         slot_cols=("jpg__haplotype_name1", "jpg__haplotype_name2"),
         right_match_col="haplotype_name",
         prefix="jpgh",
@@ -399,44 +311,41 @@ def _report_tail(
          ("ghv__snp_id", "snp_id"), ("ghv__allele", "allele")],
         "jpv", ["job_id", "patient_id", "snp_id", "allele"],
     )
-    groups = dict(head_dedup)
-    groups["jpgh"] = (
-        ["jpgh__job_id", "jpgh__patient_id", "jpgh__gene_name",
-         "jpgh__haplotype_name"],
-        ["jpgh__haplotype_name"],
-    )
-    groups["jpv"] = (
-        ["jpv__job_id", "jpv__patient_id", "jpgh__gene_name",
-         "jpgh__haplotype_name", "jpv__allele", "jpv__snp_id"],
-        ["jpv__snp_id", "jpv__allele"],
-    )
-    select_cols = [*head_select, "jpgh__haplotype_name", "jpv__snp_id",
-                   "jpv__allele"]
-    order_by = [*order_head, "jpgh__haplotype_name", "jpv__snp_id",
-                "jpv__allele"]
+    groups = {
+        "jpdr": (
+            ["patient_id", "drug_recommendation_id", "het_combo"],
+            ["patient_id", "drug_recommendation_id", "het_combo",
+             "het_combos"],
+        ),
+        "dr": (
+            ["drug_recommendation_id", "patient_id"],
+            ["dr__drug_name", "dr__recommendation"],
+        ),
+        **mid_dedup,
+        "jpgh": (
+            ["jpgh__job_id", "jpgh__patient_id", "jpgh__gene_name",
+             "jpgh__haplotype_name"],
+            ["jpgh__haplotype_name"],
+        ),
+        "jpv": (
+            ["jpv__job_id", "jpv__patient_id", "jpgh__gene_name",
+             "jpgh__haplotype_name", "jpv__allele", "jpv__snp_id"],
+            ["jpv__snp_id", "jpv__allele"],
+        ),
+    }
+    select_cols = [
+        "patient_id", "drug_recommendation_id", "het_combo", "het_combos",
+        "dr__drug_name", "dr__recommendation", *mid_select,
+        "jpgh__haplotype_name", "jpv__snp_id", "jpv__allele",
+    ]
+    order_by = [
+        "patient_id", "drug_recommendation_id", "het_combo", *mid_select,
+        "jpgh__haplotype_name", "jpv__snp_id", "jpv__allele",
+    ]
     return _condense(chain, groups, select_cols, order_by)
 
 
 # ------------------------------------------------------------ U3: matrix
-
-
-def gene_haplotype_wide_matrix(
-    ref: ReferenceTables, gene_name: str
-) -> DataFrame:
-    """The known-haplotype block of the gene matrix, wide form:
-    (haplotype_name, <one column per snp_id>) — long->wide pivot of
-    gene_haplotype_variant (GeneHaplotypeMatrix.groovy:163-174)."""
-    ghv = ref.gene_haplotype_variant.filter(F.col("gene_name") == gene_name)
-    snp_ids = [
-        r.snp_id
-        for r in ghv.select("snp_id").distinct().orderBy("snp_id").collect()
-    ]
-    return (
-        ghv.groupBy("haplotype_name")
-        .pivot("snp_id", snp_ids)
-        .agg(F.first("allele"))
-        .orderBy("haplotype_name")
-    )
 
 
 def novel_haplotype_report(

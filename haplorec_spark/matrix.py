@@ -11,9 +11,9 @@ per gene, a matrix of haplotype × SNP → allele, used to
 Scale stance: the matrices are reference data (PharmGKB scale ≈ 10² genes
 × ≤10² haplotypes × ≤10² SNPs — todo.txt:321-323), so they are collected
 once (as Arrow) and shipped to executors via ``SparkContext.broadcast``.
-Both pipeline kernels read that one broadcast: haplotype calling
-(pipeline._classified_haplotype_groups) and het disambiguation
-(pipeline.variant_to_het_variant).
+The pipeline's one kernel per (job, patient, gene),
+pipeline.call_haplotypes, reads that broadcast for both het
+disambiguation and haplotype calling.
 """
 
 from __future__ import annotations

@@ -8,23 +8,26 @@ deliberately different — Spark-first, one shuffle per stage:
 * The reference loops genes × patients issuing point queries
   (Pipeline.groovy:230-234, 359-362 — the N+1 pattern its own todo.txt
   complains about). Here every stage is a single distributed plan.
-* Haplotype calling and het disambiguation run the reference's own
-  kernels (``GeneHaplotypeMatrix.variantsToHaplotypes``,
-  GeneHaplotypeMatrix.groovy:213-249, and ``Algorithm.disambiguateHets``,
-  Algorithm.groovy:73-255) as grouped applyInPandas kernels over
-  (job, patient, gene). Both read the per-gene matrices from one
-  broadcast per :class:`Pipeline` (reference data, ~MBs), built on the
-  first job that needs it.
+* Het disambiguation and haplotype calling run the reference's own
+  kernels (``Algorithm.disambiguateHets``, Algorithm.groovy:73-255, then
+  ``GeneHaplotypeMatrix.variantsToHaplotypes``,
+  GeneHaplotypeMatrix.groovy:213-249) in one grouped applyInPandas
+  kernel per (job, patient, gene), the reference's own per patient ×
+  gene loop (:func:`call_haplotypes`). hetVariant, geneHaplotype and
+  novelHaplotype are filters of its one persisted output. It reads the
+  per-gene matrices from one broadcast per :class:`Pipeline` (reference
+  data, ~MBs), built on the first job that needs it.
 
 At 100 TB: job_patient_variant is the big table; every stage keys its
 shuffle on a prefix of (job_id, patient_id, gene_name, ...). The
 variant → gene_snp join is broadcast and drops every row outside the
-reference genes before the kernels' shuffle, so a kernel group holds one
+reference genes before the kernel's shuffle, so a kernel group holds one
 patient's rows for one gene's SNPs (CYP2D6, the largest matrix, has 151).
 """
 
 from __future__ import annotations
 
+import functools
 from dataclasses import dataclass
 
 import pandas as pd
@@ -38,9 +41,6 @@ from haplorec_spark.matrix import broadcast_matrices
 from haplorec_spark.operators.division import select_where_subset_of
 from haplorec_spark.operators.pivot import grouped_rows_to_columns
 from haplorec_spark.plans.dependency import DependencyGraph
-
-GROUP = ["job_id", "patient_id", "gene_name", "physical_chromosome",
-         "het_combo", "het_combos"]
 
 
 @dataclass
@@ -61,88 +61,47 @@ class ReferenceTables:
 
 
 # --------------------------------------------------------------------------
-# Stage: variant -> hetVariant (U2 kernel, Pipeline.groovy:340-402)
+# Stages: variant -> hetVariant + geneHaplotype + novelHaplotype
+# (U2 then U1 per patient × gene, Pipeline.groovy:340-402 and 196-316)
 # --------------------------------------------------------------------------
 
-def variant_to_het_variant(
+_CALL_COLS = ["job_id", "patient_id", "gene_name", "physical_chromosome",
+              "het_combo", "het_combos", "snp_id", "allele", "n_survivors",
+              "haplotype_name"]
+_CALL_SCHEMA = (
+    "job_id long, patient_id string, gene_name string, "
+    "physical_chromosome string, het_combo int, het_combos int, "
+    "snp_id string, allele string, n_survivors int, haplotype_name string"
+)
+
+
+def call_haplotypes(
     variant: DataFrame,
     ref: ReferenceTables,
     matrices: Broadcast,
     max_het_snps: int = 20,
+    het_variant: DataFrame | None = None,
 ) -> DataFrame:
-    """Disambiguate heterozygous calls onto physical chromosomes.
+    """Het disambiguation and haplotype calling in one grouped kernel per
+    (job, patient, gene).
 
-    Work unit = one (job, patient, gene) group of 'het' variants whose
-    SNPs belong to the gene (reference joins gene_snp,
-    Pipeline.groovy:365-372); each group runs Algorithm.disambiguateHets
-    against ``matrices`` (the broadcast of :func:`broadcast_matrices`)
-    and emits combo-numbered rows. Invalid het input (a SNP without
-    exactly two alleles) raises, failing the job as the reference does
-    (Algorithm.groovy:76-85).
-    """
-    hets = (
-        variant.filter(F.col("zygosity") == "het")
-        .join(F.broadcast(ref.gene_snp()), on="snp_id")
-        .select("job_id", "patient_id", "gene_name", "snp_id", "allele")
-    )
+    A group is one patient's hom and het variants on the gene's SNPs
+    (the reference joins gene_snp, Pipeline.groovy:365-372); ``matrices``
+    is the broadcast of :func:`broadcast_matrices`. The kernel runs the
+    reference's loop body for that patient × gene:
 
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        job_id = pdf["job_id"].iloc[0]
-        patient_id = pdf["patient_id"].iloc[0]
-        gene = pdf["gene_name"].iloc[0]
-        matrix = matrices.value[gene]
-        combos = disambiguate_hets(
-            matrix,
-            list(zip(pdf["snp_id"], pdf["allele"])),
-            max_het_snps=max_het_snps,
-        )
-        rows = het_variant_rows(combos)
-        return pd.DataFrame(
-            {
-                "job_id": [job_id] * len(rows),
-                "patient_id": [patient_id] * len(rows),
-                "physical_chromosome": [r["physical_chromosome"] for r in rows],
-                "het_combo": [r["het_combo"] for r in rows],
-                "het_combos": [r["het_combos"] for r in rows],
-                "snp_id": [r["snp_id"] for r in rows],
-                "allele": [r["allele"] for r in rows],
-            }
-        )
+    1. Algorithm.disambiguateHets on the het rows
+       (Pipeline.groovy:340-402) gives combo-numbered het rows. They are
+       emitted with a null ``n_survivors``: the hetVariant rows. A
+       seeded ``het_variant`` takes their place and is not emitted again.
+    2. GeneHaplotypeMatrix.variantsToHaplotypes over the chromosome ×
+       combo loop (Pipeline.groovy:230-313) gives one row per chromosome
+       and combo with ``n_survivors`` and ``haplotype_name`` (valid when
+       ``n_survivors`` == 1). A chromosome's variants are its hom rows
+       (Pipeline.groovy:238-246) plus one combo's het rows; a chromosome
+       without het rows gets the single combo (1, 1)
+       (Pipeline.groovy:267-272).
 
-    return hets.groupBy("job_id", "patient_id", "gene_name").applyInPandas(
-        kernel, schema=sch.JOB_PATIENT_HET_VARIANT
-    )
-
-
-# --------------------------------------------------------------------------
-# Stage: variant (+hetVariant) -> geneHaplotype + novelHaplotype
-# (U1, Pipeline.groovy:196-316)
-# --------------------------------------------------------------------------
-
-_CLASSIFIED_COLS = GROUP + ["n_survivors", "haplotype_name"]
-_CLASSIFIED_SCHEMA = (
-    "job_id long, patient_id string, gene_name string, "
-    "physical_chromosome string, het_combo int, het_combos int, "
-    "n_survivors int, haplotype_name string"
-)
-
-
-def _classified_haplotype_groups(
-    variant: DataFrame, het_variant: DataFrame, ref: ReferenceTables,
-    matrices: Broadcast,
-) -> DataFrame:
-    """Per (job, patient, gene, chromosome, het_combo): candidate-haplotype
-    classification.
-
-    Returns GROUP columns + n_survivors + haplotype_name (valid when
-    n_survivors == 1).
-
-    One grouped kernel per (job, patient, gene) folds
-    GeneHaplotypeMatrix.variantsToHaplotypes over the reference's
-    chromosome × combo loop (Pipeline.groovy:230-313). A chromosome's
-    variants are its hom rows (zygosity = 'hom', Pipeline.groovy:238-246)
-    plus one combo's disambiguated het rows; a chromosome without het
-    rows gets the single combo (1, 1) (Pipeline.groovy:267-272).
     Consequences:
 
     * unknown (snp, allele) for a gene SNP — a null allele included →
@@ -152,55 +111,82 @@ def _classified_haplotype_groups(
     * survivors > 1 → ambiguous, dropped (Pipeline.groovy:303-306)
     * a gene with neither a non-null hom allele nor a het row is not
       called at all (the work list, Pipeline.groovy:206-224)
+    * a row with a null physical_chromosome belongs to no chromosome's
+      variant set and is ignored, hom or seeded het alike
+    * invalid het input (a SNP without exactly two alleles) or more than
+      ``max_het_snps`` het SNPs raises, failing the job as the reference
+      does (Algorithm.groovy:76-85); the error names the job, patient
+      and gene
     """
-    gene_snp = F.broadcast(ref.gene_snp())
-    cols = ["job_id", "patient_id", "gene_name", "physical_chromosome",
-            "het_combo", "het_combos", "snp_id", "allele"]
-    # Hom rows carry a null het_combo; het rows their combo.
-    hom = (
-        variant.filter(F.col("zygosity") == "hom")
-        .join(gene_snp, on="snp_id")
-        .withColumn("het_combo", F.lit(None).cast("int"))
-        .withColumn("het_combos", F.lit(None).cast("int"))
-        .select(*cols)
-    )
-    het = het_variant.join(gene_snp, on="snp_id").select(*cols)
-
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        job_id, patient_id, gene = (
-            pdf[c].iloc[0] for c in ("job_id", "patient_id", "gene_name")
+    seeded = het_variant is not None
+    if not seeded:
+        rows = variant.filter(F.col("zygosity").isin("hom", "het"))
+    else:
+        rows = variant.filter(F.col("zygosity") == "hom").unionByName(
+            het_variant.withColumn("zygosity", F.lit("het")),
+            allowMissingColumns=True,
         )
-        is_het = pdf["het_combo"].notna()
-        if not is_het.any() and pdf["allele"].isna().all():
-            return pd.DataFrame([], columns=_CLASSIFIED_COLS)
+    rows = rows.join(F.broadcast(ref.gene_snp()), on="snp_id")
+
+    def call_group(pdf: pd.DataFrame, job_id, patient_id, gene) -> list:
+        matrix = matrices.value[gene]
+        hom = pdf[pdf["zygosity"] == "hom"]
+        het = pdf[pdf["zygosity"] == "het"]
+        if not seeded:
+            het_rows = het_variant_rows(disambiguate_hets(
+                matrix, list(zip(het["snp_id"], het["allele"])),
+                max_het_snps=max_het_snps,
+            ))
+            out = [(job_id, patient_id, gene, r["physical_chromosome"],
+                    r["het_combo"], r["het_combos"], r["snp_id"],
+                    r["allele"], None, None) for r in het_rows]
+        else:
+            het_rows = [
+                {"physical_chromosome": chrom, "het_combo": int(combo),
+                 "het_combos": int(combos), "snp_id": snp_id,
+                 "allele": allele}
+                for chrom, combo, combos, snp_id, allele in zip(
+                    het["physical_chromosome"], het["het_combo"],
+                    het["het_combos"], het["snp_id"], het["allele"])
+            ]
+            out = []
+        if not het_rows and hom["allele"].isna().all():
+            return out
         hom_vs: dict[str, list] = {}
-        combo_vs: dict[tuple, list] = {}
-        for chrom, combo, combos, snp_id, allele, het_row in zip(
-            pdf["physical_chromosome"], pdf["het_combo"],
-            pdf["het_combos"], pdf["snp_id"], pdf["allele"], is_het,
+        for chrom, snp_id, allele in zip(
+            hom["physical_chromosome"], hom["snp_id"], hom["allele"]
         ):
-            if chrom is None:  # belongs to no chromosome's variant set
-                continue
-            if het_row:
-                key = (chrom, int(combo), int(combos))
-                combo_vs.setdefault(key, []).append((snp_id, allele))
-            else:
+            if chrom is not None:
                 hom_vs.setdefault(chrom, []).append((snp_id, allele))
+        combo_vs: dict[tuple, list] = {}
+        for r in het_rows:
+            if r["physical_chromosome"] is not None:
+                key = (r["physical_chromosome"], r["het_combo"],
+                       r["het_combos"])
+                combo_vs.setdefault(key, []).append(
+                    (r["snp_id"], r["allele"]))
         het_chroms = {chrom for chrom, _, _ in combo_vs}
         for chrom in hom_vs.keys() - het_chroms:
             combo_vs[(chrom, 1, 1)] = []
-
-        matrix = matrices.value[gene]
-        out = []
         for (chrom, combo, combos), vs in combo_vs.items():
             haps = matrix.variants_to_haplotypes(hom_vs.get(chrom, []) + vs)
             out.append((job_id, patient_id, gene, chrom, combo, combos,
-                        len(haps), min(haps) if haps else None))
-        return pd.DataFrame(out, columns=_CLASSIFIED_COLS)
+                        None, None, len(haps), min(haps) if haps else None))
+        return out
 
-    return hom.unionByName(het).groupBy(
-        "job_id", "patient_id", "gene_name"
-    ).applyInPandas(kernel, schema=_CLASSIFIED_SCHEMA)
+    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
+        key = [pdf[c].iloc[0] for c in ("job_id", "patient_id", "gene_name")]
+        try:
+            out = call_group(pdf, *key)
+        except ValueError as e:
+            raise ValueError(
+                "job {}, patient {}, gene {}: {}".format(*key, e)
+            ) from e
+        return pd.DataFrame(out, columns=_CALL_COLS)
+
+    return rows.groupBy("job_id", "patient_id", "gene_name").applyInPandas(
+        kernel, schema=_CALL_SCHEMA
+    )
 
 
 # --------------------------------------------------------------------------
@@ -328,11 +314,12 @@ class Pipeline:
     """
 
     #: Stages whose DataFrames feed more than one downstream consumer
-    #: (``variant`` feeds both the het and the haplotype kernel).
-    #: Persisting them turns O(consumers) recomputations of the
-    #: shared lineage into one; the reference gets the same effect by
-    #: materializing every stage into a MySQL table.
-    PERSISTED_STAGES = ("variant", "hetVariant", "geneHaplotype", "genotype")
+    #: (``genotype`` feeds both recommendation stages). Persisting them
+    #: turns O(consumers) recomputations of the shared lineage into one;
+    #: the reference gets the same effect by materializing every stage
+    #: into a MySQL table. The kernel output behind hetVariant,
+    #: geneHaplotype and novelHaplotype is persisted by ``run_job``.
+    PERSISTED_STAGES = ("variant", "genotype")
 
     def __init__(
         self,
@@ -419,17 +406,8 @@ class Pipeline:
                 raise KeyError(f"unknown stage input {key!r}")
             seed_dfs[stage] = self._seed_df(stage, data, job_id)
 
+        # A rule runs after its dependencies, so ``out`` holds its inputs.
         out: dict[str, DataFrame] = {}
-        empty = {
-            stage: self.spark.createDataFrame(
-                [], sch.SCHEMAS[STAGE_TABLE_NAMES[stage]]
-            )
-            for stage in ("variant", "hetVariant")
-        }
-
-        def df_for(stage: str) -> DataFrame:
-            return out.get(stage, seed_dfs.get(stage, empty.get(stage)))
-
         graph = DependencyGraph()
 
         def rule(stage: str, fn) -> None:
@@ -442,40 +420,42 @@ class Pipeline:
                     out[stage] = out[stage].persist()
             graph.add(stage, run, STAGE_DEPENDENCIES[stage])
 
-        rule("variant", lambda: empty["variant"])
-        rule("hetVariant", lambda: variant_to_het_variant(
-            df_for("variant"), self.ref, self.matrices(), self.max_het_snps))
+        rule("variant", lambda: self.spark.createDataFrame(
+            [], sch.JOB_PATIENT_VARIANT))
+
+        @functools.cache
+        def calls() -> DataFrame:
+            # hetVariant, geneHaplotype and novelHaplotype are filters of
+            # one kernel output; persist it so the kernel runs once.
+            return call_haplotypes(
+                out["variant"], self.ref, self.matrices(),
+                self.max_het_snps, seed_dfs.get("hetVariant"),
+            ).persist()
+
+        def called(schema, where) -> DataFrame:
+            return calls().filter(where).select(*schema.fieldNames())
+
+        rule("hetVariant", lambda: called(
+            sch.JOB_PATIENT_HET_VARIANT, F.col("n_survivors").isNull()))
 
         def build_haplotypes() -> DataFrame:
-            # Both outputs branch off the classification; persist the
-            # shared prefix so novelHaplotype doesn't rerun the kernel.
-            classified = _classified_haplotype_groups(
-                df_for("variant"), df_for("hetVariant"), self.ref,
-                self.matrices(),
-            ).persist()
-            gh = classified.filter(F.col("n_survivors") == 1).select(
-                "job_id", "patient_id", "physical_chromosome", "het_combo",
-                "het_combos", "gene_name", "haplotype_name",
-            )
-            novel = classified.filter(F.col("n_survivors") == 0).select(
-                "job_id", "patient_id", "physical_chromosome", "het_combo",
-                "het_combos", "gene_name",
-            )
-            out["novelHaplotype"] = seed_dfs.get("novelHaplotype", novel)
-            return gh
+            out["novelHaplotype"] = seed_dfs.get("novelHaplotype", called(
+                sch.JOB_PATIENT_NOVEL_HAPLOTYPE, F.col("n_survivors") == 0))
+            return called(
+                sch.JOB_PATIENT_GENE_HAPLOTYPE, F.col("n_survivors") == 1)
 
         rule("geneHaplotype", build_haplotypes)
         graph.add("novelHaplotype", None, ["geneHaplotype"])
         rule("genotype",
-             lambda: gene_haplotype_to_genotype(df_for("geneHaplotype")))
+             lambda: gene_haplotype_to_genotype(out["geneHaplotype"]))
         rule("genePhenotype",
-             lambda: genotype_to_gene_phenotype(df_for("genotype"), self.ref))
+             lambda: genotype_to_gene_phenotype(out["genotype"], self.ref))
         rule("phenotypeDrugRecommendation",
              lambda: gene_phenotype_to_phenotype_drug_recommendation(
-                 df_for("genePhenotype"), self.ref))
+                 out["genePhenotype"], self.ref))
         rule("genotypeDrugRecommendation",
              lambda: genotype_to_genotype_drug_recommendation(
-                 df_for("genotype"), self.ref))
+                 out["genotype"], self.ref))
 
         # Build every leaf downstream of the seeded stages
         # (Dependency.groovy:196-201); seeding marks a stage built so its

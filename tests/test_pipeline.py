@@ -379,6 +379,83 @@ def test_het_snp_shared_by_two_genes(spark):
     ])
 
 
+def test_het_combos_stay_with_their_gene(spark):
+    # rs1 is het and on both genes, but each gene's calls read only its
+    # own disambiguation: g2 has one combo, g1 two, and no combo number
+    # of one gene reaches the other gene's calls.
+    ref = make_ref(
+        spark,
+        ghv=[
+            ("g1", "*1", "rs1", "A"), ("g1", "*1", "rs2", "G"),
+            ("g1", "*2", "rs1", "G"), ("g1", "*2", "rs2", "T"),
+            ("g1", "*3", "rs1", "A"), ("g1", "*3", "rs2", "T"),
+            ("g2", "*1", "rs1", "A"), ("g2", "*1", "rs3", "C"),
+            ("g2", "*2", "rs1", "G"), ("g2", "*2", "rs3", "C"),
+        ],
+    )
+    out = Pipeline(spark, ref).run_job(variants=[
+        ("patient1", "A", "rs1", "A", "het"),
+        ("patient1", "B", "rs1", "G", "het"),
+        ("patient1", "A", "rs2", "G", "het"),
+        ("patient1", "B", "rs2", "T", "het"),
+        ("patient1", "A", "rs3", "C", "hom"),
+        ("patient1", "B", "rs3", "C", "hom"),
+    ])
+    assert rows(out["genotype"], "het_combo", "het_combos", "gene_name",
+                "haplotype_name1", "haplotype_name2") == [
+        (1, 1, "g2", "*1", "*2"),
+        (1, 2, "g1", "*1", "*2"),
+        (2, 2, "g1", "*3", None),
+    ]
+
+
+# -- a seeded hetVariant stage (PipelineTest.groovy:610-746) -----------------
+
+def test_seeded_het_variants_skip_null_chromosome(spark):
+    # Seeded het rows replace disambiguation; a row without a physical
+    # chromosome belongs to no chromosome's variant set and is ignored,
+    # as a hom row without one is.
+    ref = make_ref(spark, ghv=AMBIGUOUS_GHV)
+    out = Pipeline(spark, ref).run_job(
+        variants=[
+            ("patient1", "A", "rs2", "G", "hom"),
+            ("patient1", "B", "rs2", "G", "hom"),
+        ],
+        hetVariants=[
+            ("patient1", "A", "rs1", "A"),
+            ("patient1", "B", "rs1", "G"),
+            ("patient1", None, "rs1", "G"),
+        ],
+    )
+    assert rows(out["geneHaplotype"], "patient_id", "physical_chromosome",
+                "gene_name", "haplotype_name") == [
+        ("patient1", "A", "g1", "*1"), ("patient1", "B", "g1", "*3"),
+    ]
+    check(out, "genotype", [(1, "patient1", "g1", "*1", "*3")])
+    check(out, "novelHaplotype", [])
+
+
+# -- invalid het input fails the job and names it ----------------------------
+
+@pytest.mark.parametrize("max_het_snps, variants, error", [
+    (20, [("patient1", "A", "rs1", "A", "het")], "saw rs1 with 1 variants"),
+    (1, [("patient1", "A", "rs1", "A", "het"),
+         ("patient1", "B", "rs1", "G", "het"),
+         ("patient1", "A", "rs2", "A", "het"),
+         ("patient1", "B", "rs2", "G", "het")],
+     "2 heterozygous SNPs exceeds max_het_snps=1"),
+])
+def test_kernel_error_names_job_patient_and_gene(
+    spark, max_het_snps, variants, error
+):
+    ref = make_ref(spark, ghv=AMBIGUOUS_GHV)
+    out = Pipeline(spark, ref, max_het_snps=max_het_snps).run_job(
+        job_id=7, variants=variants)
+    with pytest.raises(Exception, match="job 7, patient patient1, gene g1: "
+                       f".*{error}"):
+        out["hetVariant"].collect()
+
+
 # -- materialize: per-job partition overwrite --------------------------------
 
 def test_materialize_keeps_session_conf_and_other_jobs(

@@ -69,7 +69,7 @@ def disambiguate_hets(
     num_hets = len(het_snps)
     if num_hets > max_het_snps:
         raise ValueError(
-            f"{matrix.gene_name}: {num_hets} heterozygous SNPs exceeds "
+            f"{num_hets} heterozygous SNPs exceeds "
             f"max_het_snps={max_het_snps} (2^(n-1) assignments)"
         )
 

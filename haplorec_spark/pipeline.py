@@ -313,13 +313,19 @@ class Pipeline:
     (Pipeline.groovy:567-576) without touching other jobs' partitions.
     """
 
-    #: Stages whose DataFrames feed more than one downstream consumer
-    #: (``genotype`` feeds both recommendation stages). Persisting them
-    #: turns O(consumers) recomputations of the shared lineage into one;
-    #: the reference gets the same effect by materializing every stage
-    #: into a MySQL table. The kernel output behind hetVariant,
-    #: geneHaplotype and novelHaplotype is persisted by ``run_job``.
-    PERSISTED_STAGES = ("variant", "genotype")
+    #: Stages whose DataFrames feed more than one downstream consumer.
+    #: ``genotype`` feeds both recommendation stages; genePhenotype and
+    #: the two recommendation stages are written by ``materialize`` and
+    #: read again by the reports, which would otherwise re-run the
+    #: division (6 Spark jobs) and genePhenotype per report. Persisting
+    #: them turns O(consumers) recomputations of the shared lineage into
+    #: one; the reference gets the same effect by materializing every
+    #: stage into a MySQL table. The kernel output behind hetVariant,
+    #: geneHaplotype and novelHaplotype is persisted by ``run_job`` too;
+    #: :meth:`release` frees all of a job's cached frames.
+    PERSISTED_STAGES = ("variant", "genotype", "genePhenotype",
+                        "phenotypeDrugRecommendation",
+                        "genotypeDrugRecommendation")
 
     def __init__(
         self,
@@ -332,6 +338,8 @@ class Pipeline:
         self.max_het_snps = max_het_snps
         self._next_job_id = 1
         self._matrices: Broadcast | None = None
+        #: job id -> the frames ``run_job`` persisted for it, in order
+        self._persisted: dict[int, list[DataFrame]] = {}
 
     def matrices(self) -> Broadcast:
         """The per-gene matrices, broadcast once per Pipeline: the first
@@ -408,7 +416,12 @@ class Pipeline:
 
         # A rule runs after its dependencies, so ``out`` holds its inputs.
         out: dict[str, DataFrame] = {}
+        persisted = self._persisted.setdefault(job_id, [])
         graph = DependencyGraph()
+
+        def persist(df: DataFrame) -> DataFrame:
+            persisted.append(df.persist())
+            return df
 
         def rule(stage: str, fn) -> None:
             def run() -> None:
@@ -417,7 +430,7 @@ class Pipeline:
                 else:
                     out[stage] = fn()
                 if stage in self.PERSISTED_STAGES:
-                    out[stage] = out[stage].persist()
+                    out[stage] = persist(out[stage])
             graph.add(stage, run, STAGE_DEPENDENCIES[stage])
 
         rule("variant", lambda: self.spark.createDataFrame(
@@ -427,10 +440,10 @@ class Pipeline:
         def calls() -> DataFrame:
             # hetVariant, geneHaplotype and novelHaplotype are filters of
             # one kernel output; persist it so the kernel runs once.
-            return call_haplotypes(
+            return persist(call_haplotypes(
                 out["variant"], self.ref, self.matrices(),
                 self.max_het_snps, seed_dfs.get("hetVariant"),
-            ).persist()
+            ))
 
         def called(schema, where) -> DataFrame:
             return calls().filter(where).select(*schema.fieldNames())
@@ -473,6 +486,13 @@ class Pipeline:
         for t in targets:
             graph.build(t, built)
         return out
+
+    def release(self, job_id: int) -> None:
+        """Unpersist every frame ``run_job`` persisted for ``job_id``; call
+        it once the job's tables are written and its reports read, so a
+        long-lived Pipeline holds no cache per finished job."""
+        for df in self._persisted.pop(job_id, []):
+            df.unpersist()
 
     # -- persistence -------------------------------------------------------
 

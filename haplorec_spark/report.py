@@ -15,12 +15,10 @@ Spark-first:
 * The reports read the stage frames as given: ``Pipeline.run_job``
   persists the ones worth caching (``Pipeline.PERSISTED_STAGES``), and
   in production they are the parquet stage tables.
-* The condensed post-processing chain (noDuplicates -> filter ->
-  collapse -> fill -> changeKeys, sql/Report.groovy:94-170) maps onto
-  operators.rows with an EXPLICIT total order: a ``_seq`` row number
-  computed before dedup drives both the window dedup and the collapse
-  sort, replacing the reference's reliance on MySQL fetch order
-  (acknowledged at sql/Report.groovy:90-93).
+* The condensed post-processing (noDuplicates -> collapse,
+  sql/Report.groovy:94-170) is one grouped Arrow kernel per job over an
+  EXPLICIT sort (:func:`_condense`), replacing the reference's reliance
+  on MySQL fetch order (acknowledged at sql/Report.groovy:90-93).
 * Duplicate keys: the reference defaults to each table's surrogate
   primary key ``id`` (condensedJoin, sql/Report.groovy:147-167); our
   stage tables carry no surrogate ids, so the equivalent natural keys
@@ -28,21 +26,23 @@ Spark-first:
   are unique, haplorec.sql.jinja unique indexes).
 
 Scale: the join chain is shuffle-keyed on (job_id, patient_id, ...);
-reference tables broadcast. The collapse kernel partitions per job —
-report output is job-scoped and human-readable-sized by construction.
+reference tables broadcast. Condensing adds one exchange, on job_id, and
+no window: report output is job-scoped and human-readable-sized.
 """
 
 from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, Window
+import pyarrow as pa
+import pyarrow.compute as pc
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
 
 from haplorec_spark.operators.rows import (
-    collapse,
-    no_duplicates,
-    project,
+    collapse_rows,
+    no_duplicates_rows,
     report_can_collapse,
     report_merge,
 )
@@ -130,34 +130,34 @@ def _condense(
     select_cols: Sequence[str],
     order_by: Sequence[str],
 ) -> DataFrame:
-    """noDuplicates -> project -> collapse -> rename, over an explicit
-    total order (``_seq``)."""
-    w = Window.partitionBy("job_id").orderBy(
-        *[F.col(c).asc_nulls_first() for c in order_by]
-    )
-    seq = joined.withColumn("_seq", F.row_number().over(w))
-    deduped = no_duplicates(seq, groups, order_by=["_seq"])
-    kept = project(deduped, ["job_id", "_seq", *select_cols])
-    # hoisted out of the per-ROW can_collapse call (round 13): the old
-    # lambda rebuilt the filtered header and two filtered dicts per row
-    visible = [c for c in kept.columns if c not in ("job_id", "_seq")]
+    """noDuplicates -> collapse -> rename as one grouped Arrow kernel per
+    job, the reference's one iterator chain (sql/Report.groovy:94-170):
+    stable-sort the job's rows by ``order_by`` (ascending, nulls first),
+    run :func:`no_duplicates_rows` then :func:`collapse_rows`, and emit
+    ``select_cols`` (each shown by some group) under their aliased
+    headers, all nullable: carry-over rows are mostly null. Rows tying
+    on ``order_by`` differ only in hidden duplicate-key columns, so their
+    order does not change the output."""
+    keys = [c for key, _ in groups.values() for c in key]
+    headers = [_alias_header(c) for c in select_cols]
+    schema = StructType([StructField(h, joined.schema[c].dataType, True)
+                         for c, h in zip(select_cols, headers)])
 
-    def _can(hdr, a, b):
-        return report_can_collapse(
-            visible,
-            {k: a[k] for k in visible if a[k] is not None},
-            {k: b[k] for k in visible if b[k] is not None},
-        )
+    def kernel(tbl: pa.Table) -> pa.Table:
+        tbl = tbl.take(pc.sort_indices(
+            tbl, [(c, "ascending") for c in order_by],
+            null_placement="at_start"))
+        kept = [{c: fresh.get(c) for c in select_cols}
+                for fresh in no_duplicates_rows(tbl.to_pylist(), groups)]
+        out = collapse_rows(kept, select_cols, report_can_collapse,
+                            report_merge)
+        return pa.Table.from_arrays(
+            [pa.array([r[c] for r in out], type=tbl.schema.field(c).type)
+             for c in select_cols], names=headers)
 
-    collapsed = collapse(
-        kept,
-        order_by=["_seq"],
-        partition_by=["job_id"],
-        can_collapse=_can,
-        merge=report_merge,
-    )
-    out = collapsed.select(*select_cols)
-    return out.toDF(*[_alias_header(c) for c in select_cols])
+    needed = dict.fromkeys(["job_id", *order_by, *select_cols, *keys])
+    return joined.select(*needed).groupBy("job_id").applyInArrow(
+        kernel, schema=schema)
 
 
 def phenotype_drug_recommendation_report(

@@ -820,7 +820,8 @@ def incremental_variant_ingest(
     """foreachBatch ingest: each micro-batch of (patient_id,
     physical_chromosome, snp_id, allele, zygosity) rows runs as one
     pipeline job whose stage outputs append to job_id-partitioned
-    parquet under ``warehouse``.
+    parquet under ``warehouse``; the job's cached frames are released
+    once its tables are written.
 
     Returns the started StreamingQuery. Job ids are
     ``job_id_offset + batch_id + 1`` — deterministic on replay, so a
@@ -831,10 +832,12 @@ def incremental_variant_ingest(
     def ingest(batch_df: DataFrame, batch_id: int) -> None:
         if not batch_df.take(1):
             return
-        out = pipeline.run_job(
-            job_id=job_id_offset + batch_id + 1, variants=batch_df
-        )
-        pipeline.materialize(out, warehouse)
+        job_id = job_id_offset + batch_id + 1
+        out = pipeline.run_job(job_id=job_id, variants=batch_df)
+        try:
+            pipeline.materialize(out, warehouse)
+        finally:
+            pipeline.release(job_id)
 
     return (
         variant_stream.writeStream.foreachBatch(ingest)

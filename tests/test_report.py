@@ -10,10 +10,18 @@ and the novel matrix stacks known haplotypes above patient chromosomes
 from __future__ import annotations
 
 import pytest
+from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from haplorec_spark import schema as sch
 from haplorec_spark.pipeline import Pipeline
+from haplorec_spark.operators.rows import (
+    collapse_rows,
+    no_duplicates_rows,
+    report_can_collapse,
+    report_merge,
+)
 from haplorec_spark.report import (
+    _condense,
     genotype_drug_recommendation_report,
     novel_haplotype_report,
     or_slot_join,
@@ -109,6 +117,101 @@ def test_report_plan_has_no_nested_loop_join(spark, ref, out, report):
     assert "HashJoin" in p or "SortMergeJoin" in p
     assert "BroadcastNestedLoopJoin" not in p
     assert "CartesianProduct" not in p
+
+
+@pytest.mark.parametrize("report", [
+    phenotype_drug_recommendation_report,
+    genotype_drug_recommendation_report,
+])
+def test_report_plan_condenses_in_one_kernel(spark, ref, out, report):
+    # noDuplicates and collapse run in one grouped Arrow kernel per job,
+    # with no dedup window.
+    rep = report(out, ref, job_id=1)
+    rep.collect()
+    # the final physical plan, not the formatted explain, which also
+    # prints the initial plan of every adaptive query
+    final = rep._jdf.queryExecution().executedPlan().executedPlan()
+    p = final.toString()
+    assert "Window" not in p
+    assert p.count("FlatMapGroupsInArrow") == 1
+
+
+def test_condense_matches_pure_kernels_per_job(spark):
+    groups = {
+        "p": (["patient_id"], ["patient_id", "drug"]),
+        # ``drug`` is owned by two groups: shown when either is fresh
+        "d": (["patient_id", "drug"], ["drug"]),
+        # ``h_key`` is a hidden duplicate-key column
+        "h": (["patient_id", "h_key", "hap"], ["hap"]),
+        "v": (["patient_id", "hap", "snp"], ["snp"]),
+    }
+    select_cols = ["patient_id", "drug", "hap", "snp"]
+    order_by = ["patient_id", "drug", "hap", "snp"]
+    data = [
+        (1, "p1", "a", 1, "*1", "rs1"),
+        (1, "p1", "b", 1, "*1", "rs1"),
+        # ties with the first row on every order_by column
+        (1, "p1", "a", 2, "*1", "rs1"),
+        (1, "p1", "a", 1, "*1", "rs3"),
+        # a null drug sorts first within p1
+        (1, "p1", None, 1, "*2", "rs2"),
+        (1, "p2", "a", 1, "*1", "rs1"),
+        # job 2 repeats job 1's keys: its dedup state starts afresh
+        (2, "p1", "a", 1, "*1", "rs1"),
+        (2, "p1", "a", 1, "*2", "rs2"),
+    ]
+    # non-nullable inputs: the kernel's outputs must still be nullable
+    schema = StructType([
+        StructField("job_id", LongType(), False),
+        StructField("patient_id", StringType(), False),
+        StructField("drug", StringType(), True),
+        StructField("h_key", LongType(), False),
+        StructField("hap", StringType(), False),
+        StructField("snp", StringType(), False),
+    ])
+    got = _condense(spark.createDataFrame(data, schema), groups,
+                    select_cols, order_by)
+    assert got.columns == ["SAMPLE_ID", "DRUG", "HAP", "SNP"]
+    assert all(f.nullable for f in got.schema.fields)
+
+    def expected(job_id):
+        recs = [dict(zip(schema.fieldNames(), r)) for r in data
+                if r[0] == job_id]
+        recs.sort(key=lambda r: [(r[c] is not None, r[c]) for c in order_by])
+        kept = [{c: f.get(c) for c in select_cols}
+                for f in no_duplicates_rows(recs, groups)]
+        return [tuple(r[c] for c in select_cols) for r in collapse_rows(
+            kept, select_cols, report_can_collapse, report_merge)]
+
+    one, two = expected(1), expected(2)
+    # each job's rows come out together and in order; job order is free
+    assert [tuple(r) for r in got.collect()] in (one + two, two + one)
+
+
+def test_release_frees_what_each_job_cached(spark, ref, tmp_path):
+    # A long-lived Pipeline holds no cache per finished job. RDD ids,
+    # not a count, because the ContextCleaner may free earlier tests'
+    # checkpoints meanwhile.
+    jsc = spark.sparkContext._jsc
+
+    def cached():
+        return set(jsc.getPersistentRDDs().keySet())
+
+    before = cached()
+    pipe = Pipeline(spark, ref)
+    for job_id in (1, 2, 3):
+        out = pipe.run_job(job_id=job_id, variants=[
+            ("patient1", "A", "rs1", "A", "hom"),
+            ("patient1", "A", "rs2", "G", "hom"),
+            ("patient1", "B", "rs3", "C", "hom"),
+            ("patient1", "B", "rs4", "T", "hom"),
+        ])
+        pipe.materialize(out, str(tmp_path / "wh"))
+        phenotype_drug_recommendation_report(out, ref, job_id).collect()
+        genotype_drug_recommendation_report(out, ref, job_id).collect()
+        assert cached() - before
+        pipe.release(job_id)
+        assert cached() - before == set()
 
 
 def test_or_slot_join_sql_or_semantics(spark):

@@ -662,8 +662,13 @@ def test_incremental_variant_ingest_second_drop_keeps_first_job(
         )
         q.awaitTermination(180)
 
+    # each batch releases what its job cached (RDD ids, not a count:
+    # the ContextCleaner may free earlier tests' checkpoints meanwhile)
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keySet())
     drop("patient1")
     drop("patient2")
+    assert set(jsc.getPersistentRDDs().keySet()) - before == set()
     gh = spark.read.parquet(f"{wh}/job_patient_gene_haplotype")
     assert sorted(
         r["job_id"] for r in gh.select("job_id").distinct().collect()
